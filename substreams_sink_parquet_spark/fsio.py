@@ -221,22 +221,34 @@ class HadoopFS:
             list(ex.map(lambda t: self.write_bytes(t, payload), targets))
 
 
-def live_index(fs: "HadoopFS", live: str) -> dict[str, list[int]]:
+# Marker file in a live epoch dir: every range dir in it holds exactly one
+# block-sorted file, as the stream's append writes them, so finalize may
+# rename that file into place instead of rewriting it.
+RANGE_FILES_MARKER = "_RANGE_FILES"
+
+
+def live_index(fs: "HadoopFS", live: str,
+               marked: set[str] | None = None) -> dict[str, list[int]]:
     """ONE listing sweep over a ``_live`` staging area: {epoch dir name:
     sorted range starts}. Shared by the streaming sink's per-batch pass and
     offline compaction so a micro-batch (or maintenance run) costs
     O(epochs + ranges) FS calls, not O(epochs x ranges) — with a long
     holdback and a fast trigger that difference is thousands of
     driver-to-store round-trips per batch."""
+    # ``marked``, if given, collects the epochs whose dir holds
+    # RANGE_FILES_MARKER — from the same listing
     idx: dict[str, list[int]] = {}
     for e in fs.listdir(live):
         if not e.startswith("epoch="):
             continue
+        names = fs.listdir(url_join(live, e))
         idx[e] = sorted(
             int(d.split("=", 1)[1])
-            for d in fs.listdir(url_join(live, e))
+            for d in names
             if d.startswith("range_start=")
         )
+        if marked is not None and RANGE_FILES_MARKER in names:
+            marked.add(e)
     return idx
 
 

@@ -50,8 +50,9 @@ base+appends equals ``bm25_scores_batch`` over the full corpus to the digit
 (pinned by pytest). The caller owns doc_id dedup across batches (compose
 with the corpus builder's screens upstream), exactly as with the ANN index.
 
-Crash-safety: ``_LEX_META.json`` is the commit marker — a rebuild deletes it
-BEFORE overwriting ``postings/`` and every read path refuses postings
+Crash-safety: ``_LEX_META.json`` is the commit marker — a rebuild stages
+its trees under ``_rebuild/`` and only then deletes the meta, swaps the trees
+in by rename and rewrites the meta; every read path refuses postings
 without meta loudly. An epoch dir whose stats JSON is missing (crash between
 the postings write and the stats write) is likewise refused BY NAME: its
 replay overwrites both, restoring consistency.
@@ -139,43 +140,15 @@ def _postings(docs: DataFrame, n_buckets: int,
     )
 
 
-def _observed_docs(docs: DataFrame, text_col: str):
-    """(docs-with-observation, Observation): corpus stats (n_docs,
-    sum_dl) ride the postings WRITE as observed metrics instead of
-    costing their own corpus scan (optimization r14, guide §2.4 —
-    same mechanism as the sink's holdback-horizon observed metric).
-    The metrics are exact integer count/sum over the same rows the
-    historical pre-flight aggregate scanned, so the meta values are
-    bit-identical; read them with :func:`_obs_stats` AFTER the write
-    action completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    return docs.observe(
-        obs,
+def _corpus_stats(docs: DataFrame, text_col: str) -> dict:
+    """(n_docs, sum_dl) of ``docs`` in one aggregate — exact integer
+    count/sum, computed before the build mutates anything, so a corpus-data
+    error aborts with the old index intact."""
+    r = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col(text_col), " "))).alias("sum_dl"),
-    ), obs
-
-
-def _obs_stats(obs, docs: DataFrame, text_col: str) -> dict:
-    """Read the observed (n_docs, sum_dl) after the write action. A
-    PROVABLY-empty input (the corpus-stream bootstrap builds over
-    ``filter(lit(False))``) lets the optimizer collapse the plan around
-    the CollectMetrics node, and the observation then yields a row the
-    py4j bridge cannot convert — for that case only, fall back to the
-    direct aggregate, which on the provably-empty relation is a
-    LocalTableScan, not a corpus scan."""
-    try:
-        row = obs.get
-        return {"n_docs": int(row["n_docs"]),
-                "sum_dl": int(row["sum_dl"] or 0)}
-    except Exception:
-        r = docs.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(F.split(F.col(text_col), " "))).alias("sum_dl"),
-        ).collect()[0]
-        return {"n_docs": int(r["n_docs"]), "sum_dl": int(r["sum_dl"] or 0)}
+    ).first()
+    return {"n_docs": int(r["n_docs"]), "sum_dl": int(r["sum_dl"] or 0)}
 
 
 def write_lexical_index(docs: DataFrame, index_dir: str,
@@ -185,57 +158,46 @@ def write_lexical_index(docs: DataFrame, index_dir: str,
     """Tokenize the corpus once and lay the postings down partitioned by
     term bucket. Returns the metadata dict it persisted.
 
-    ONE corpus pass total (optimization r14, guide §2.4/§6): the corpus
-    stats (n_docs, sum_dl) ride the postings write as OBSERVED metrics
-    instead of a pre-flight aggregate scan; the df tree still derives
-    from a column-pruned read-back of the just-written compact artifact
-    (see _df_from_postings for why persisting instead measured 3.5x
-    slower). The meta additionally records ``buckets`` — the bucket
+    The corpus stats (n_docs, sum_dl) come from one aggregate; the df tree
+    derives from a column-pruned read-back of the just-written compact
+    artifact (see _df_from_postings for why persisting instead measured
+    3.5x slower). The meta additionally records ``buckets`` — the bucket
     ids physically present — so serves list only the probed bucket dirs
     (one listdir at build replaces n_buckets dir listings per serve).
 
-    Commit-marker protocol (ann_index.write_ann_index): meta is deleted
-    immediately BEFORE the postings overwrite, so a crash mid-overwrite
-    leaves postings without meta — which every read path refuses loudly.
-    The historical pre-flight stats scan doubled as a data validation
-    pass (a corpus-data error surfaced before any mutation); with the
-    stats observed on the write, such an error now aborts the build
-    mid-overwrite instead — the same loud-refusal state as any other
-    mid-write crash, for one full corpus scan less per build. Plan
-    analysis errors (missing/mistyped columns) still surface before any
-    deletion, when the postings expressions are resolved below. A
-    successful rebuild clears any ``postings_epochs`` appends: they are
-    superseded by the full-corpus rebuild (the caller rebuilds FROM the
-    grown corpus)."""
+    Stage-and-swap (ann_index.write_ann_index's commit marker): the new
+    postings and df trees are written under ``_rebuild/`` first, so a build
+    that fails before the swap leaves the old index serving. The swap
+    deletes the meta, replaces the trees by rename and writes the meta
+    last; a crash inside it leaves postings without meta, which every read
+    path refuses loudly. A successful rebuild clears any
+    ``postings_epochs`` appends: they are superseded by the full-corpus
+    rebuild (the caller rebuilds FROM the grown corpus)."""
     spark = docs.sparkSession
     fs = HadoopFS(spark, index_dir)
-    observed, obs = _observed_docs(docs, text_col)
-    post = _postings(observed, n_buckets, text_col, id_col)
-    # resolve the plan driver-side before touching the old index: analysis
-    # errors (the historical pre-flight's schema-level protection) still
-    # abort with the old index intact
-    post.schema
-    meta_path = url_join(index_dir, _META)
-    if fs.exists(meta_path):
-        fs.delete(meta_path, recursive=False)
-    for stale in ("postings_epochs", "df_epochs"):
-        ep_root = url_join(index_dir, stale)
-        if fs.exists(ep_root):
-            fs.delete(ep_root, recursive=True)
-    # a rebuild also releases the old stream's epoch-history binding: the
-    # superseding epochs are gone, so a NEW stream may append from epoch 0
-    # without tripping the corpus-stream guard (code review r12)
-    stream_marker = url_join(index_dir, "_STREAM_ID")
-    if fs.exists(stream_marker):
-        fs.delete(stream_marker, recursive=False)
-    post_dir = url_join(index_dir, "postings")
-    post.write.mode("overwrite").partitionBy("term_bucket").parquet(post_dir)
-    stats = _obs_stats(obs, docs, text_col)
-    _df_from_postings(spark, post_dir).write.mode("overwrite").partitionBy(
+    stats = _corpus_stats(docs, text_col)
+    build = url_join(index_dir, "_rebuild")
+    build_post = url_join(build, "postings")
+    _postings(docs, n_buckets, text_col, id_col).write.mode(
+        "overwrite"
+    ).partitionBy("term_bucket").parquet(build_post)
+    _df_from_postings(spark, build_post).write.mode("overwrite").partitionBy(
         "term_bucket"
-    ).parquet(url_join(index_dir, "df"))
+    ).parquet(url_join(build, "df"))
     meta = {"n_buckets": int(n_buckets), "has_df": True,
-            "buckets": _present_buckets(fs, post_dir), **stats}
+            "buckets": _present_buckets(fs, build_post), **stats}
+    meta_path = url_join(index_dir, _META)
+    fs.delete(meta_path, recursive=False)
+    # a rebuild also releases the old stream's epoch-history binding
+    # (_STREAM_ID): the superseding epochs are gone, so a NEW stream may
+    # append from epoch 0 without tripping the corpus-stream guard (code
+    # review r12)
+    for stale in ("postings", "df", "postings_epochs", "df_epochs",
+                  "_STREAM_ID"):
+        fs.delete(url_join(index_dir, stale), recursive=True)
+    for tree in ("postings", "df"):
+        fs.rename(url_join(build, tree), url_join(index_dir, tree))
+    fs.delete(build, recursive=True)
     fs.write_bytes(meta_path, json.dumps(meta).encode())
     return meta
 
@@ -264,20 +226,18 @@ def append_epoch_to_lexical_index(new_docs: DataFrame, index_dir: str,
     the batch's (n_docs, sum_dl) delta lands as ``_EPOCH_STATS.json``
     beside the postings — written LAST of the three, so an epoch whose
     postings or df crashed mid-write has no stats file and is refused by
-    name until the replay repairs all of it. ONE batch pass total
-    (optimization r14, mirroring the rebuild): the delta stats ride the
-    postings write as observed metrics, so the batch is never scanned
-    twice; the df delta stays an aggregate over the epoch's just-written
-    compact artifact (bytes-scale — see _df_from_postings for why the
-    persisted-frame alternative measured slower). The caller owns doc_id
-    dedup vs the base build and other epochs (the corpus builder's
-    screens do exactly that upstream)."""
+    name until the replay repairs all of it. The delta stats are one
+    aggregate over the batch, taken before any mutation (build parity); the
+    df delta is an aggregate over the epoch's just-written compact artifact
+    (bytes-scale — see _df_from_postings for why the persisted-frame
+    alternative measured slower). The caller owns doc_id dedup vs the base
+    build and other epochs (the corpus stream's screens do exactly that
+    upstream)."""
     spark = new_docs.sparkSession
     meta = read_lexical_meta(spark, index_dir)
     fs = HadoopFS(spark, index_dir)
-    observed, obs = _observed_docs(new_docs, text_col)
-    post = _postings(observed, meta["n_buckets"], text_col, id_col)
-    post.schema  # analysis errors abort before any mutation (build parity)
+    stats = _corpus_stats(new_docs, text_col)
+    post = _postings(new_docs, meta["n_buckets"], text_col, id_col)
     ep_dir = url_join(index_dir, "postings_epochs", f"epoch={int(epoch_id)}")
     # clear a previous attempt's stats first: a replay that crashes before
     # its own stats write must not leave the OLD attempt's stats beside
@@ -286,7 +246,6 @@ def append_epoch_to_lexical_index(new_docs: DataFrame, index_dir: str,
     if fs.exists(stats_path):
         fs.delete(stats_path, recursive=False)
     post.write.mode("overwrite").partitionBy("term_bucket").parquet(ep_dir)
-    stats = _obs_stats(obs, new_docs, text_col)
     if meta.get("has_df"):
         _df_from_postings(spark, ep_dir).write.mode("overwrite").partitionBy(
             "term_bucket"

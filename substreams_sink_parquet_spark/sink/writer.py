@@ -11,6 +11,10 @@ to the reference's zero-padded ``{start:010d}-{end:010d}.parquet`` layout and
 backfills empty ranges for gaps (writer.go:220-267) so the lake is contiguous
 from the configured anchor.
 
+The streaming sink shares this one range writer: its live append is this
+staging write (one block-sorted file per range per epoch) and its finalize
+renames those files with :func:`_finalize`, so a row is written once.
+
 Store abstraction: all metadata operations (rename, list, backfill touch) go
 through :mod:`..fsio` — the Hadoop FileSystem API — so the lake root may be
 ``file://``, ``s3a://``, ``gs://`` or ``abfs://`` exactly like the
@@ -185,7 +189,23 @@ def write_ranges(
         writer = writer.option(k, v)
     writer.partitionBy(*part_cols).parquet(staging)
 
-    written = _finalize(spark, fs, staging, out_dir, distinct_ranges, opts, block_col)
+    prefix = "__range_start="
+    staged = {
+        int(d[len(prefix):]): url_join(staging, d)
+        for d in fs.listdir(staging)
+        if d.startswith(prefix)
+    }
+    supplied = set(distinct_ranges)
+    absent, extra = supplied - set(staged), set(staged) - supplied
+    if absent or extra:
+        raise ValueError(
+            "write_ranges: supplied `ranges` disagree with the data actually "
+            f"staged — supplied-but-absent: {sorted(absent)}, "
+            f"staged-but-unsupplied: {sorted(extra)}. "
+            "Pass the distinct range starts present in df (or ranges=None)."
+        )
+    written = _finalize(spark, fs, staged, out_dir, opts, block_col)
+    fs.delete(staging, recursive=True)
 
     if backfill and distinct_ranges:
         max_block_seen = max(distinct_ranges)
@@ -272,36 +292,24 @@ def _ordered_range_parts(fs: HadoopFS, part_dir: str) -> list[tuple[str, int]]:
     return out
 
 
-def _finalize(spark: SparkSession, fs: HadoopFS, staging: str, out_dir: str,
-              distinct_ranges: list[int], opts: WriterOptions,
+def _finalize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
+              out_dir: str, opts: WriterOptions,
               block_col: str = "block_number") -> list[str]:
-    """Rename staged per-range directories to padded flat file names —
+    """Rename each range's staged file(s) to padded flat file names —
     metadata-only, mirroring the reference's .partial → final rename
     (writer.go:80-85, 176-213), fanned out over the FS thread pool.
+    ``sources`` maps a range start to the dir holding its file(s): a
+    ``write_ranges`` staging dir, or a live range dir the stream's append
+    wrote. The caller deletes the sources afterwards.
 
     Ranges whose single staged file exceeds ``target_file_bytes`` take the
     soft-rotation path: ONE extra Spark job re-splits all oversize ranges
     into approximately target-sized, block-ordered ``-partNNNN`` files."""
-    prefix = "__range_start="
-    staged = {
-        int(d[len(prefix):])
-        for d in fs.listdir(staging)
-        if d.startswith(prefix)
-    }
-    supplied = set(distinct_ranges)
-    if staged != supplied:
-        raise ValueError(
-            "write_ranges: supplied `ranges` disagree with the data actually "
-            f"staged — supplied-but-absent: {sorted(supplied - staged)}, "
-            f"staged-but-unsupplied: {sorted(staged - supplied)}. "
-            "Pass the distinct range starts present in df (or ranges=None)."
-        )
-
     moves: list[tuple[str, str]] = []
     oversize: dict[int, int] = {}
     written = []
-    for rs in sorted(staged):
-        part_dir = url_join(staging, f"{prefix}{rs}")
+    for rs in sorted(sources):
+        part_dir = sources[rs]
         parts = _ordered_range_parts(fs, part_dir)
         if not parts:
             raise RuntimeError(f"range {rs}: staged directory holds no part files")
@@ -336,27 +344,32 @@ def _finalize(spark: SparkSession, fs: HadoopFS, staging: str, out_dir: str,
     fs.rename_all(moves)
 
     if oversize:
-        written += _split_oversize(spark, fs, staging, out_dir, oversize, opts, block_col)
-
-    fs.delete(staging, recursive=True)
+        written += _split_oversize(spark, fs, sources, out_dir, oversize, opts, block_col)
     return written
 
 
-def _split_oversize(spark: SparkSession, fs: HadoopFS, staging: str, out_dir: str,
-                    oversize: dict[int, int], opts: WriterOptions,
+def _split_oversize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
+                    out_dir: str, oversize: dict[int, int], opts: WriterOptions,
                     block_col: str) -> list[str]:
     """Soft rotation (reference run.go:48 --target-file-bytes): re-split every
     oversize range in ONE job. repartitionByRange on (range, block) makes
     task order == block order, so the name-sorted part files of each range
     dir read back in block order — the lake's ordering contract holds."""
-    dirs = [url_join(staging, f"__range_start={rs}") for rs in oversize]
     total_parts = sum(
         max(1, math.ceil(sz / opts.target_file_bytes)) for sz in oversize.values()
     )
     resplit_dir = url_join(out_dir, "_staging_resplit")
     # drop the write_tasks sub-bucket partition column if the staged layout
-    # carries one — it must not leak into the re-split files as data
-    df = spark.read.option("basePath", staging).parquet(*dirs).drop("__sub")
+    # carries one — it must not leak into the re-split files as data.
+    # mergeSchema: live sources of different epochs may span an additive
+    # schema upgrade
+    df = (
+        spark.read.option("mergeSchema", "true")
+        .parquet(*[sources[rs] for rs in oversize])
+        .drop("__sub")
+        .withColumn("__range_start",
+                    range_start_col(block_col, opts.start_block, opts.partition_size))
+    )
     writer = (
         df.repartitionByRange(total_parts, "__range_start", block_col)
         .sortWithinPartitions("__range_start", block_col)
@@ -415,7 +428,7 @@ def covered_spans(fs: HadoopFS, out_dir: str) -> list[tuple[int, int]]:
 
 def backfill_empty(
     spark: SparkSession,
-    template_df: DataFrame,
+    template_df: DataFrame | str,
     out_dir: str,
     opts: WriterOptions,
     upto: int,
@@ -426,7 +439,8 @@ def backfill_empty(
     One Spark job writes a single empty-template parquet; its bytes are then
     fanned out to every gap through plain FS writes (an empty range file's
     content is schema-only, independent of the range — only the NAME encodes
-    the range). O(gaps) small FS writes, 16-way parallel, zero per-gap jobs."""
+    the range). O(gaps) small FS writes, 16-way parallel, zero per-gap jobs.
+    ``template_df``: a DataFrame, or a parquet file read only if a gap exists."""
     fs = HadoopFS(spark, out_dir)
     spans = covered_spans(fs, out_dir)  # span-granular: tiered files count
 
@@ -444,6 +458,8 @@ def backfill_empty(
     if not missing:
         return []
 
+    if isinstance(template_df, str):
+        template_df = spark.read.parquet(template_df)
     tmpl_dir = url_join(out_dir, "_empty_template")
     empty = spark.createDataFrame([], template_df.schema)
     writer = empty.coalesce(1).write.mode("overwrite")

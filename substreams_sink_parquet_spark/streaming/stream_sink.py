@@ -22,6 +22,9 @@ Reference translation (SURVEY.md §3.1):
   every remaining live range after the query stops — without it, a
   ``--stop-block`` run's terminal clamped range could never satisfy the
   holdback inequality and would sit in ``_live/`` forever.
+- .partial → final rename (writer.go:80-85): the live area holds one
+  block-sorted file per range per epoch, and finalize renames it into place;
+  only a range spanning several live sources is merged (``write_ranges``).
 
 All file metadata operations go through :mod:`..fsio` (Hadoop FileSystem),
 so the lake root may be file://, s3a://, gs:// or abfs://.
@@ -36,7 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import protowire as pw
 from ..decode import decode_payloads
-from ..fsio import HadoopFS, live_index, live_range_dirs, url_join
+from ..fsio import RANGE_FILES_MARKER, HadoopFS, live_index, live_range_dirs, url_join
 from ..partition import range_start_col
 from ..schema import SchemaOptions
 from ..sink.explode import explode_all
@@ -47,8 +50,10 @@ from ..sink.writer import (
     _split_range_name,
     _stage_partitioning,
     backfill_empty,
+    file_name,
     ensure_schema_compatible,
     parquet_write_options,
+    write_ranges,
 )
 
 
@@ -57,8 +62,9 @@ class StreamingSink:
     """foreachBatch sink with undo holdback.
 
     Layout under ``out_dir``:
-      - ``_live/range_start=N/`` parquet rows of not-yet-final ranges
-        (re-writable on reorg);
+      - ``_live/epoch=E/range_start=N/`` rows of not-yet-final ranges
+        (re-writable on reorg): one block-sorted file per range per epoch,
+        which finalize renames into place;
       - ``{rs:010d}-{re:010d}.parquet`` finalized immutable range files.
     """
 
@@ -100,10 +106,7 @@ class StreamingSink:
 
     def __post_init__(self) -> None:
         self._fs = HadoopFS(self.spark, self.out_dir)
-
-    @property
-    def live_dir(self) -> str:
-        return url_join(self.out_dir, "_live")
+        self._batch_ranges = 1  # set per batch by process_batch
 
     def _child_dirs(self) -> list[str]:
         if not self.explode:
@@ -135,27 +138,21 @@ class StreamingSink:
         # The holdback horizon needs max(block_number) over the RAW batch —
         # decoded rows won't do: nil payloads are skipped at decode
         # (sinker.go:158-160 parity), and a sparse module's tip blocks would
-        # then never advance the horizon. In plain mode a CollectMetrics
-        # node piggybacks the max onto the append job — one job per
-        # micro-batch instead of two (the separate agg re-read every staged
-        # input file). In explode mode the persisted decode would bury the
-        # metrics node inside InMemoryRelation where they never surface (and
-        # ``obs.get`` would block the stream forever), so the separate
-        # JVM-only agg job stays — it is noise next to N table writes.
-        # Same reasoning when the rollup persists the decode in plain mode.
-        obs = None
+        # then never advance the horizon. One aggregate over the pruned
+        # block_number column gives the horizon and, from the min, the
+        # number of ranges the append repartitions the batch into.
+        lo, hi = raw_batch.agg(
+            F.min("block_number"), F.max("block_number")
+        ).first()
+        if hi is not None:
+            self._max_seen = max(self._max_seen, int(hi))
+            start, size = self.opts.start_block, self.opts.partition_size
+            self._batch_ranges = (hi - start) // size - (lo - start) // size + 1
         will_persist = (
             (self.explode and bool(self._child_dirs()))
             or self.rollup_spec is not None
             or bool(self.profile_columns)
         )
-        if not will_persist:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            raw_batch = raw_batch.observe(
-                obs, F.max("block_number").alias("hi")
-            )
         decoded = decode_payloads(raw_batch, self.spec, self.schema_opts)
         if self.check_schema and not self._schema_checked:
             # Cross-run guard the reference lacks: a resumed run whose .spkg
@@ -250,34 +247,39 @@ class StreamingSink:
         finally:
             if will_persist:
                 decoded.unpersist()
-        if obs is not None:  # from the append action above — no extra job
-            hi = obs.get["hi"]
-        else:
-            hi = raw_batch.agg(F.max("block_number")).collect()[0][0]
-        if hi is not None:
-            self._max_seen = max(self._max_seen, int(hi))
         self._finalize_ready(self.out_dir)
         for child_dir in self._child_dirs():
             self._finalize_ready(child_dir)
 
     def _append_live(self, df: DataFrame, table_dir: str, epoch_id: int) -> None:
-        """Stage the epoch's rows under ``_live/epoch={id}/range_start=N/``,
-        OVERWRITING the epoch directory. foreachBatch is at-least-once: after
-        a mid-batch crash the same epoch re-runs, and an append-mode write
-        would duplicate every row the first attempt got out; overwriting the
-        epoch-keyed directory makes the replay idempotent (the documented
-        batchId-based dedup contract). Committed epochs never re-run, so
-        earlier directories are stable."""
+        """Stage the epoch's rows as ``write_ranges`` stages them — one
+        block-sorted file per range under ``_live/epoch={id}/range_start=N/``
+        — and mark the epoch dir so finalize may rename them into place (a
+        ``write_tasks`` sub-split leaves several files: unmarked, merged).
+        OVERWRITES the epoch directory: foreachBatch is at-least-once, and
+        after a mid-batch crash the same epoch re-runs; an append-mode write
+        would duplicate every row the first attempt got out, while the
+        epoch-keyed overwrite makes the replay idempotent (the batchId-based
+        dedup contract). Committed epochs never re-run."""
         ranged = df.withColumn(
-            "range_start",
+            "__range_start",
             range_start_col("block_number", self.opts.start_block, self.opts.partition_size),
         )
-        writer = ranged.write.mode("overwrite")
+        staged, part_cols = _stage_partitioning(
+            ranged, self._batch_ranges, self.opts, "block_number"
+        )
+        writer = (
+            staged.sortWithinPartitions(*part_cols, "block_number")
+            .drop("__sub")
+            .withColumnRenamed("__range_start", "range_start")
+            .write.mode("overwrite")
+        )
         for k, v in parquet_write_options(self.opts).items():
             writer = writer.option(k, v)
-        writer.partitionBy("range_start").parquet(
-            url_join(table_dir, "_live", f"epoch={epoch_id}")
-        )
+        epoch_dir = url_join(table_dir, "_live", f"epoch={epoch_id}")
+        writer.partitionBy("range_start").parquet(epoch_dir)
+        if "__sub" not in part_cols:
+            self._fs.write_bytes(url_join(epoch_dir, RANGE_FILES_MARKER), b"")
 
     # -- finalize -----------------------------------------------------------
 
@@ -312,10 +314,10 @@ class StreamingSink:
         UNORDERED thread pool (fsio.rename_all), so a crash can leave
         ``-part0000.parquet`` in the lake while later parts still sit in
         ``_staging``/``_staging_resplit`` — a final-looking name that is
-        actually a subset. Staging is deleted as _finalize's last step and
-        the live source dirs only after it returns, so a surviving staging
-        root PROVES the live dirs still hold every row of the crashed
-        pass. Recovery: drop the partially-renamed final files for every
+        actually a subset. Staging is deleted only after its renames, and
+        the live source dirs only after that, so a surviving staging root
+        PROVES the live dirs still hold every row of the crashed pass.
+        Recovery: drop the partially-renamed final files for every
         stranded range plus the staging roots, and let the normal holdback
         finalize rebuild them from the intact live dirs. Without this, the
         replay guard would read part0000 as "complete", delete the live
@@ -422,114 +424,84 @@ class StreamingSink:
         self._fs.delete(markers_dir, recursive=True)
 
     def _finalize_ready(self, table_dir: str, force: bool = False) -> None:
-        """Compact every fully-past range to one sorted padded-name file — in
-        ONE Spark job for the whole ready set, however many ranges it holds.
-        Steady-state streaming finalizes one range at a time, but catch-up
-        (a drained backlog, availableNow over a deep staging dir) readies
-        dozens at once; a per-range job loop would serialize those. Reading
-        all ready live dirs with a basePath recovers range_start as a
-        column, and the batch writer's _finalize pass (hash-partitioned one
-        file per range, parallel renames, target_file_bytes splitting) does
-        the rest. ``force`` finalizes every remaining live range regardless
-        of the holdback horizon — terminal drain only (Close parity)."""
+        """Finalize every fully-past range (``force``: every live range —
+        terminal drain only, Close parity). A range whose only source is a
+        file the append wrote (a marked epoch) is renamed into place by
+        ``_finalize``, metadata only. The rest (several epochs, compacted
+        ``epoch=-1`` or demoted ``epoch=-2`` rows, an unmarked epoch) are
+        merged through ``write_ranges`` in one Spark job."""
         # crash repairs BEFORE the existence guard below (code review r12):
-        # a stranded _staging means the pre-crash finalize never finished
-        # its renames (its live sources are intact — they are deleted only
-        # after _finalize returns, which deletes _staging first), so a
-        # final part file the guard would probe may be an incomplete
-        # SUBSET; a stranded _undo_markers entry means a demotion crashed
-        # and the probed file may be a STALE pre-reorg file. Both repairs
-        # converge the lake so the guard's existence probe is trustworthy.
+        # a stranded _staging(_resplit) means a pre-crash merge or re-split
+        # never finished its renames (its live sources are intact — they are
+        # deleted only after _finalize returns), so a final part file the
+        # guard would probe may be an incomplete SUBSET; a stranded
+        # _undo_markers entry means a demotion crashed and the probed file
+        # may be a STALE pre-reorg file. Both repairs converge the lake so
+        # the guard's existence probe is trustworthy.
         self._repair_stranded_finalize(table_dir)
         self._repair_undo_markers(table_dir)
         live = url_join(table_dir, "_live")
-        idx = self._live_index(live)
+        marked: set[str] = set()
+        idx = live_index(self._fs, live, marked)
         ranges = self._live_ranges(idx) if force else self._ready_ranges(idx)
         if not ranges:
             return
         # crash-replay guard (code review r11): a range whose FINAL file
         # already exists was completely finalized by a pre-crash pass —
         # one that may have merged EARLIER epochs' live rows the replayed
-        # batch does not carry. Re-finalizing from the replay's live dirs
-        # alone would OVERWRITE the complete file with a subset
-        # (HadoopFS.rename is delete-dst-first), silently losing the
+        # batch does not carry (or renamed its file). Re-finalizing from the
+        # replay's live dirs alone would OVERWRITE the complete file with a
+        # subset (HadoopFS.rename is delete-dst-first), silently losing the
         # earlier epochs' rows. The replayed live rows are a subset of
         # what that finalize already wrote, so drop them and skip the
         # range. The undo path cannot collide with this rule: demotion
         # writes a marker before touching the range, and the marker repair
         # above deletes the stale finalized file (re-demoting first when
         # the crash predates the demotion) before this probe runs.
-        from ..sink.writer import file_name
-
-        fresh = []
-        for rs in ranges:
+        def finalized(rs: int) -> bool:
             base = file_name(rs, self._range_end(rs), self.opts.pad)
-            if self._fs.exists(url_join(table_dir, base)) or self._fs.exists(
-                url_join(table_dir,
-                         base[: -len(".parquet")] + "-part0000.parquet")
-            ):
-                for d in self._range_dirs(idx, live, rs):
-                    self._fs.delete(d, recursive=True)
-            else:
-                fresh.append(rs)
-        ranges = fresh
-        if not ranges:
-            return
-        srcs = [d for rs in ranges for d in self._range_dirs(idx, live, rs)]
-        # mergeSchema: epochs may span an additive schema upgrade (allowed
-        # by ensure_schema_compatible) — without it Spark reads ONE file's
-        # footer and would silently drop the added column from the
-        # finalized file before the sources are deleted
-        df = (
-            self.spark.read.option("basePath", live)
-            .option("mergeSchema", "true")
-            .parquet(*srcs)
-            .drop("epoch")
-            .withColumnRenamed("range_start", "__range_start")
-        )
-        staging = url_join(table_dir, "_staging")
-        # same partitioning contract as write_ranges: one task per range by
-        # default; with opts.write_tasks set, ranges sub-split on a computed
-        # block-bucket column (catch-up batches with few large ready ranges
-        # otherwise encode on len(ranges) cores)
-        staged_df, part_cols = _stage_partitioning(
-            df, len(ranges), self.opts, "block_number"
-        )
-        writer = (
-            staged_df.sortWithinPartitions(*part_cols, "block_number")
-            .write.mode("overwrite")
-        )
-        for k, v in parquet_write_options(self.opts).items():
-            writer = writer.option(k, v)
-        writer.partitionBy(*part_cols).parquet(staging)
-        _finalize(self.spark, self._fs, staging, table_dir, ranges, self.opts)
-        for src in srcs:
-            self._fs.delete(src, recursive=True)
-        # Drop epochs emptied by finalize — decided from the index, no
-        # re-listing. An epoch whose every range was just finalized holds
-        # only write markers (_SUCCESS), which previously kept it "non-empty"
-        # and accumulated one stray dir per micro-batch forever.
+            part0 = base[: -len(".parquet")] + "-part0000.parquet"
+            return any(self._fs.exists(url_join(table_dir, n))
+                       for n in (base, part0))
+
+        fresh = [rs for rs in ranges if not finalized(rs)]
+        srcs = {rs: self._range_dirs(idx, live, rs) for rs in ranges}
+        renames = {rs: srcs[rs][0] for rs in fresh if len(srcs[rs]) == 1
+                   and srcs[rs][0].split("/")[-2] in marked}
+        merges = [rs for rs in fresh if rs not in renames]
+        template = None
+        if renames:
+            template = url_join(table_dir, _finalize(
+                self.spark, self._fs, renames, table_dir, self.opts)[0])
+        if merges:
+            # mergeSchema: epochs may span an additive schema upgrade
+            # (allowed by ensure_schema_compatible) — without it Spark reads
+            # ONE file's footer and would silently drop the added column
+            # from the finalized file before the sources are deleted
+            template = (
+                self.spark.read.option("basePath", live)
+                .option("mergeSchema", "true")
+                .parquet(*[d for rs in merges for d in srcs[rs]])
+                .drop("epoch", "range_start")
+            )
+            write_ranges(template, table_dir, self.opts, backfill=False,
+                         ranges=merges)
+        for d in (d for ds in srcs.values() for d in ds):
+            self._fs.delete(d, recursive=True)
+        # Drop epochs emptied by finalize or the guard — decided from the
+        # index, no re-listing. Such an epoch holds only markers (_SUCCESS,
+        # _RANGE_FILES), which previously kept it "non-empty" and
+        # accumulated one stray dir per micro-batch forever.
         rset = set(ranges)
         for e, rss in idx.items():
             if set(rss) <= rset:
                 self._fs.delete(url_join(live, e), recursive=True)
-        self._backfill_before(table_dir, max(ranges), df.drop("__range_start"))
-
-    def _backfill_before(self, table_dir: str, rs: int, template: DataFrame) -> None:
-        """Contiguity guarantee: empty files for gaps below the finalized
-        horizon, in one pass (backfill_empty skips covered ranges). Safe for
-        the whole batch at once: readiness is monotone in range start, so no
-        still-live range can sit below a finalized one — anything missing
-        down there is a true gap. The schema template is the decoded frame
-        itself — NOT a re-read of a finalized file, whose plain name may not
-        exist when target_file_bytes split it into -partNNNN files."""
-        if rs <= self.opts.start_block:
-            return
-        # self.opts verbatim: a hand-copied subset silently reset
-        # compression_level / page_size / dict_encoding / write_stats to
-        # defaults, drifting the backfilled empty files' parquet options
-        # from every other file in the lake
-        backfill_empty(self.spark, template, table_dir, self.opts, upto=rs - 1)
+        # Contiguity: empty files for gaps below the finalized horizon.
+        # Readiness is monotone in range start, so no still-live range can
+        # sit below a finalized one — anything missing there is a true gap.
+        if fresh and max(fresh) > self.opts.start_block:
+            backfill_empty(self.spark, template, table_dir, self.opts,
+                           upto=max(fresh) - 1)
 
     # -- terminal drain -----------------------------------------------------
 
@@ -676,7 +648,12 @@ class StreamingSink:
                 # pre-pass above converges it on the next undo run
                 parent, base = src.rsplit("/", 1)
                 tmp = url_join(parent, "_rewrite_" + base)
-                writer = kept.write.mode("overwrite")
+                # one block-sorted file, like the append wrote: the epoch's
+                # range-files marker must stay true for this dir
+                writer = (
+                    kept.coalesce(1).sortWithinPartitions("block_number")
+                    .write.mode("overwrite")
+                )
                 for k, v in parquet_write_options(self.opts).items():
                     writer = writer.option(k, v)
                 writer.parquet(tmp)

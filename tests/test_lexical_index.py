@@ -640,3 +640,31 @@ def test_hybrid_serve_path_job_count_pinned(spark, sf_dir, tmp_path):
         f"hybrid serve path grew to {len(jobs)} jobs (budget "
         f"{HYBRID_SERVE_JOB_BUDGET}): {jobs}"
     )
+
+
+def test_failed_rebuild_leaves_old_index_serving(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """A rebuild stages its trees under _rebuild/ and swaps them in only
+    once they are written: a rebuild whose postings write fails leaves the
+    old meta and the old postings serving."""
+    from pyspark.sql import DataFrameWriter
+
+    docs = _docs(spark, sf_dir)
+    qs = _queries(spark)
+    idx = str(tmp_path / "lex")
+    meta = L.write_lexical_index(docs.limit(50), idx, n_buckets=4)
+    before = _collect(L.bm25_scores_indexed(spark, idx, qs))
+    assert before
+    orig = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith("postings"):
+            raise IOError("postings write failed")
+        return orig(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(IOError, match="postings write failed"):
+            L.write_lexical_index(docs, idx, n_buckets=4)
+    assert L.read_lexical_meta(spark, idx) == meta
+    assert _collect(L.bm25_scores_indexed(spark, idx, qs)) == before

@@ -66,3 +66,36 @@ def test_sample_mod_trains_on_hash_slice(spark, corpus):
     c1 = m1.stages[-1].coefficients
     c2 = m2.stages[-1].coefficients
     assert c1 == c2
+
+
+def test_model_trains_after_stream_batch_and_lexical_build(spark, tmp_path):
+    """MLlib fit in a session that already ran a plain-mode stream batch
+    and a lexical-index build. Neither may leave an observed-metrics
+    listener behind: once a DataFrame.observe() has run, Spark 4.1 fails
+    every later MLlib fit in the session (NotSerializableException:
+    ObservationManager)."""
+    from substreams_sink_parquet_spark.llm.lexical_index import (
+        write_lexical_index,
+    )
+    from substreams_sink_parquet_spark.sink.writer import WriterOptions
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_protowire import BLOCK
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "lake")
+    StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                  opts=WriterOptions(partition_size=10)).process_batch(
+        _blocks_df(spark, list(range(12))), epoch_id=0)
+    docs = spark.createDataFrame(
+        [(i, f"{GOOD} extra words number {i} close the note here"
+          if i % 2 else BAD_SYMBOLS) for i in range(20)],
+        "doc_id long, text string",
+    )
+    write_lexical_index(docs, str(tmp_path / "lex"), n_buckets=4)
+    model = train_quality_model(docs)
+    scores = {r.doc_id: r.p_keep for r in score_quality(model, docs).collect()}
+    assert min(scores[i] for i in range(1, 20, 2)) > max(
+        scores[i] for i in range(0, 20, 2))

@@ -1070,3 +1070,111 @@ def test_undo_marker_commit_is_atomic(tmp_path, spark):
     for src, dst in marker_renames:
         assert "/." in src and src.endswith(".tmp")
         assert dst.endswith(".json")
+
+
+def test_batch_of_complete_ranges_is_written_once(spark, tmp_path,
+                                                  monkeypatch):
+    """A plain-mode batch whose ranges all complete inside it runs ONE
+    parquet write — the live append — and finalize renames its one
+    block-sorted file per range into place: no _staging, no rewrite."""
+    from pyspark.sql import DataFrameWriter
+
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                         opts=WriterOptions(partition_size=10, start_block=0))
+    raw = _blocks_df(spark, list(range(29, -1, -1)))  # unsorted input
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def counting(self, path, *args, **kwargs):
+        writes.append(path)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    sink.process_batch(raw, epoch_id=0)
+    assert len(writes) == 1 and "/_live/" in writes[0], writes
+    assert not os.path.exists(os.path.join(out_dir, "_staging"))
+    files = _final_files(out_dir)
+    assert len(files) == 3
+    for i, f in enumerate(files):
+        got = pq.read_table(os.path.join(out_dir, f)).column("block_number")
+        assert got.to_pylist() == list(range(10 * i, 10 * i + 10))
+
+
+def test_unmarked_live_dir_is_merged_not_renamed(spark, tmp_path):
+    """Only a file the append wrote (its epoch dir carries the range-files
+    marker) is renamed into place. A single-source live dir without the
+    marker — an older layout, here one unsorted file — is merged, so the
+    final file comes out block-sorted."""
+    from substreams_sink_parquet_spark.fsio import url_join
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    out = str(tmp_path / "out")
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out,
+                         opts=WriterOptions(partition_size=10, start_block=0),
+                         check_schema=False)
+    rows = [(b, f"s{b}") for b in (7, 3, 9, 0, 5, 1, 8, 2, 6, 4)]
+    spark.createDataFrame(rows, "block_number long, s string").coalesce(
+        1
+    ).write.parquet(url_join(out, "_live", "epoch=0", "range_start=0"))
+    sink._max_seen = 15
+    sink._finalize_ready(out)
+    got = pq.read_table(os.path.join(out, "0000000000-0000000010.parquet"))
+    assert got.column("block_number").to_pylist() == list(range(10))
+
+
+def test_rename_finalize_crash_then_replay_converges(spark, tmp_path,
+                                                     monkeypatch):
+    """A crash after the first rename of a rename-path finalize: offsets
+    are uncommitted, so a fresh sink replays the epoch — it re-appends the
+    rows, the final-file guard drops those of the range already renamed,
+    and the rest are renamed. Every block lands exactly once, the lake is
+    contiguous and nothing is left live."""
+    import pytest
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+    from substreams_sink_parquet_spark.sink.writer import lake_coverage
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    opts = WriterOptions(partition_size=10, start_block=0)
+    raw = _blocks_df(spark, list(range(30)))
+
+    def first_move_then_crash(self, moves):
+        self.rename(*list(moves)[0])
+        raise IOError("crash after the first rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(HadoopFS, "rename_all", first_move_then_crash)
+        with pytest.raises(IOError, match="first rename"):
+            StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                          opts=opts).process_batch(raw, epoch_id=0)
+    assert len(_final_files(out_dir)) == 1
+
+    StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                  opts=opts).process_batch(raw, epoch_id=0)
+    blocks = sorted(
+        b
+        for f in _final_files(out_dir)
+        for b in pq.read_table(
+            os.path.join(out_dir, f)
+        ).column("block_number").to_pylist()
+    )
+    assert blocks == list(range(30))
+    assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
+    live = os.path.join(out_dir, "_live")
+    assert not os.path.exists(live) or os.listdir(live) == []
