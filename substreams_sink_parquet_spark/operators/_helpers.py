@@ -93,6 +93,9 @@ def tiny_df(spark, rows, schema):
         if isinstance(v, (list, tuple)):
             for e in v:
                 _no_nan(e)
+        elif isinstance(v, dict):
+            for e in v.values():
+                _no_nan(e)
 
     rows = [tuple(r) for r in rows]
     for r in rows:

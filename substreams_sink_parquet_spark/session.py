@@ -54,6 +54,17 @@ def get_spark(app_name: str = "substreams-sink-parquet-spark",
         .config("spark.sql.join.preferSortMergeJoin",
                 os.environ.get("SPARK_PREFER_SMJ", "false"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Let AQE coalesce the shuffle partitions inside a cached plan. With
+        # Spark's default (false) a persisted frame keeps the raw
+        # spark.sql.shuffle.partitions count of its last exchange, and so
+        # does every join over it and every write from it: the corpus sink
+        # persists frames above its in-batch doc_id window, and each of
+        # its outputs came out as 32 tiny files per epoch. The cost: a
+        # plan that reads cached data may need one extra shuffle where it
+        # relied on the cache's output partitioning. Fixed, not an env
+        # override: the corpus sink's file counts depend on it.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
     )

@@ -16,6 +16,14 @@ Layout under ``out_dir``:
   - ``_neardup_index/epoch={id}/`` MinHash band rows (near_dup stage)
   - ``_embed_index/epoch={id}/``   LSH (bucket, embedding) rows (embed stage)
   - ``_quarantine/epoch={id}/``    unparseable raw lines (forensics)
+  - ``_drift_rejects/epoch={id}/`` null-key rows and in-batch doc_id
+    collisions; like the quarantine, written only when non-empty
+
+The finally admitted rows (``kept``) are computed once per batch, persisted,
+and carry the digests the stages computed (``text_hash``, and ``sig`` with
+near_dup on): ``docs`` drops them, and the ``_index`` and ``_neardup_index``
+increments are map-only projections of ``kept``, so no stage result is
+joined back or recomputed for a write.
 
 Exactly-once under at-least-once replays, same contract as the block sink
 (stream_sink.py:_append_live): every output is keyed by epoch and
@@ -312,6 +320,32 @@ class CorpusSink:
             if e.startswith("epoch=") and e != f"epoch={exclude_epoch}"
         ]
 
+    @staticmethod
+    def _reject_counts(batch: DataFrame) -> tuple[int, int]:
+        """(quarantined, drift-rejected) row counts of one parsed batch, from
+        one aggregate: unparseable lines; and parsed rows that are not
+        their doc_id's single keeper (a null doc_id or text, or an in-batch
+        doc_id collision past its first row)."""
+        parsed = F.col(CORRUPT_COL).isNull()
+        keyed = parsed & F.col("doc_id").isNotNull() & F.col("text").isNotNull()
+        row = batch.agg(
+            F.count(F.when(~parsed, 1)).alias("bad"),
+            F.count(F.when(parsed, 1)).alias("parsed"),
+            F.countDistinct(F.when(keyed, F.col("doc_id"))).alias("ids"),
+        ).first()
+        return row.bad, row.parsed - row.ids
+
+    def _write_rejects(self, rows: DataFrame, n_rows: int, root_name: str,
+                       epoch_id: int) -> None:
+        """Write one reject class's epoch dir when the class is non-empty;
+        otherwise delete any dir an earlier attempt of this epoch left, so
+        a replay converges either way (a missing dir counts as zero)."""
+        path = url_join(self.out_dir, root_name, f"epoch={epoch_id}")
+        if n_rows:
+            rows.write.mode("overwrite").parquet(path)
+        else:
+            self._fs.delete(path)
+
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Window
 
@@ -326,18 +360,18 @@ class CorpusSink:
         # dirs safe against a different stream's epoch numbering.
         guard_stream_id(self._fs, self.out_dir, self.stream_id,
                         what="corpus")
-        # persist the PARSED batch before any action: the quarantine and
-        # drift writes below are full actions, and without this each paid
-        # its own JSONL/WARC parse of the whole staged input — the
-        # dominant per-batch cost at crawl scale (code review r11)
+        # persist the PARSED batch before any action: the reject count and
+        # the quarantine and drift writes below are full actions, and
+        # without this each paid its own JSONL/WARC parse of the whole
+        # staged input — the dominant per-batch cost at crawl scale (code
+        # review r11)
         batch = batch.persist()
         to_unpersist: list[DataFrame] = [batch]
         line_postings = None
         try:
             clean, bad = split_quarantine(batch)
-            bad.write.mode("overwrite").parquet(
-                url_join(self.out_dir, "_quarantine", f"epoch={epoch_id}")
-            )
+            n_bad, n_drift = self._reject_counts(batch)
+            self._write_rejects(bad, n_bad, "_quarantine", epoch_id)
             # A parseable line missing doc_id or text is schema drift, not
             # a document: its text_hash must not reach the index (the null
             # key drops the doc itself from the admitted join, permanently
@@ -366,10 +400,7 @@ class CorpusSink:
                 .select("doc_id", "lang", "source",
                         F.lit("dup_doc_id_in_batch").alias("reason"))
             )
-            drift.write.mode("overwrite").parquet(
-                url_join(self.out_dir, "_drift_rejects",
-                         f"epoch={epoch_id}")
-            )
+            self._write_rejects(drift, n_drift, "_drift_rejects", epoch_id)
             clean = clean.filter(F.col("__rn") == 1).drop("__rn")
             index_dirs = self._index_dirs(
                 "_index", exclude_epoch=int(epoch_id))
@@ -541,9 +572,12 @@ class CorpusSink:
                 clean = clean.join(
                     contaminated.select("doc_id"), "doc_id", "left_anti"
                 )
-            # stage 1: exact content hash vs the persistent hash index
-            admitted = incremental_dedup(clean, index)
-            kept = clean.join(admitted.select("doc_id"), "doc_id")
+            # stage 1: exact content hash vs the persistent hash index;
+            # kept carries text_hash so the _index increment is a
+            # projection of it
+            admitted = incremental_dedup(clean, index).persist()
+            to_unpersist.append(admitted)
+            kept = clean.join(admitted, "doc_id")
             nd_admitted = None
             if self.near_dup:
                 from ..llm.dedup import incremental_neardup
@@ -557,13 +591,19 @@ class CorpusSink:
                     nd_index = self.spark.createDataFrame(
                         [], "band_id int, band_hash bigint, sig array<bigint>"
                     )
-                # stage 2: MinHash band overlap vs the persistent band index
+                # stage 2: MinHash band overlap vs the persistent band
+                # index; the result comes back persisted. kept carries each
+                # admitted doc's sig from one row per doc (its first band,
+                # or a short doc's all-null row) — no shuffle
                 nd_admitted = incremental_neardup(
                     kept, nd_index, threshold=self.neardup_threshold
-                ).persist()
+                )
                 to_unpersist.append(nd_admitted)
                 kept = kept.join(
-                    nd_admitted.select("doc_id").distinct(), "doc_id"
+                    nd_admitted.filter(
+                        F.coalesce("band_id", F.lit(0)) == 0
+                    ).select("doc_id", "sig"),
+                    "doc_id",
                 )
             ed_admitted = None
             if self.embed_dup:
@@ -591,18 +631,22 @@ class CorpusSink:
                 )
             kept = kept.persist()
             to_unpersist.append(kept)
-            kept.write.mode("overwrite").parquet(
+            docs = kept.drop("text_hash", "sig")
+            docs.write.mode("overwrite").parquet(
                 url_join(self.out_dir, "docs", f"epoch={epoch_id}")
             )
-            kept_ids = kept.select("doc_id")
             # EVERY index records only FINALLY-admitted docs: a doc a later
             # stage rejects must leave no trace in any earlier stage's
             # index, or a future re-crawl of content that is NOT in the
-            # corpus would be rejected against it. Unscreenable docs carry
-            # all-null signature rows — only real signatures are persisted.
+            # corpus would be rejected against it. The exact and MinHash
+            # increments are projections of kept, which carries both
+            # digests. Unscreenable docs carry a null sig — only real
+            # signatures are persisted.
             if nd_admitted is not None:
-                nd_admitted.join(kept_ids, "doc_id").filter(
-                    F.col("band_id").isNotNull()
+                from ..llm.dedup import _band_rows
+
+                _band_rows(
+                    kept.filter(F.col("sig").isNotNull()).select("doc_id", "sig")
                 ).select("band_id", "band_hash", "sig").write.mode(
                     "overwrite"
                 ).parquet(
@@ -618,9 +662,7 @@ class CorpusSink:
                 ).parquet(
                     url_join(self.out_dir, "_embed_index", f"epoch={epoch_id}")
                 )
-            admitted.join(kept_ids, "doc_id").select(
-                "text_hash"
-            ).write.mode("overwrite").parquet(
+            kept.select("text_hash").write.mode("overwrite").parquet(
                 url_join(self.out_dir, "_index", f"epoch={epoch_id}")
             )
             if line_postings is not None:
@@ -629,7 +671,9 @@ class CorpusSink:
                 # line's cross-epoch hotness (one rejected duplicate per
                 # epoch would alone push any of its lines past the
                 # threshold)
-                line_postings.join(kept_ids, "doc_id").groupBy("lh").agg(
+                line_postings.join(
+                    kept.select("doc_id"), "doc_id"
+                ).groupBy("lh").agg(
                     F.countDistinct("doc_id").cast("long").alias("n_docs")
                 ).write.mode("overwrite").parquet(
                     url_join(self.out_dir, "_line_index", f"epoch={epoch_id}")

@@ -50,6 +50,11 @@ def test_tiny_df_rejects_nan_loudly(spark):
     assert rows == [(1, 0.5)]
 
 
+def test_tiny_df_rejects_nan_in_dict_value(spark):
+    with pytest.raises(ValueError, match="NaN"):
+        tiny_df(spark, [(1, {"k": float("nan")})], "i int, m map<string,double>")
+
+
 def test_tiny_df_takes_arrow_fast_path(spark):
     # ADVICE r13: pin the OPTIMIZATION, not just the absence of a Python
     # node — the pickle fallback also plans without EvalPython. The Arrow

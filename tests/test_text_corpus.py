@@ -1588,3 +1588,93 @@ def test_recycled_external_artifact_dir_refuses_foreign_stream(spark, tmp_path):
     # released with it, so the new stream appends cleanly from epoch 0
     write_bigram_lm(docs, lm_dir, n_buckets=4)
     b.process_batch(spark.createDataFrame(rows, _DDL_R11), 0)
+
+
+def test_reject_dirs_are_written_only_for_nonempty_classes(spark, tmp_path):
+    """The quarantine and drift dirs of an epoch exist only when that
+    epoch rejected rows of their class; a replay of the epoch without
+    rejects removes the dirs its earlier attempt wrote."""
+    from substreams_sink_parquet_spark.streaming.corpus_stream import (
+        CorpusSink,
+    )
+
+    out = tmp_path / "out"
+    sink = CorpusSink(spark=spark, out_dir=str(out))
+    dirty = [(1, "alpha doc", "en", "w", 9, None),
+             (1, "alpha doc", "en", "w", 9, None),        # in-batch dup id
+             (None, None, None, None, None, "{broken")]   # unparseable
+    clean = [(2, "beta doc", "en", "w", 8, None)]
+    sink.process_batch(spark.createDataFrame(dirty, _DDL_R11), 0)
+    sink.process_batch(spark.createDataFrame(clean, _DDL_R11), 1)
+    assert [r[0] for r in spark.read.parquet(
+        str(out / "_quarantine" / "epoch=0")).collect()] == ["{broken"]
+    assert [(r.doc_id, r.reason) for r in spark.read.parquet(
+        str(out / "_drift_rejects" / "epoch=0")).collect()] \
+        == [(1, "dup_doc_id_in_batch")]
+    for name in ("_quarantine", "_drift_rejects"):
+        assert not (out / name / "epoch=1").exists()
+    # replay epoch 0 without its bad rows: its stale reject dirs go
+    sink.process_batch(spark.createDataFrame(clean, _DDL_R11), 0)
+    for name in ("_quarantine", "_drift_rejects"):
+        assert not (out / name / "epoch=0").exists()
+
+
+def test_near_dup_epoch_computes_signatures_once_and_sizes_files(
+        spark, tmp_path, monkeypatch):
+    """One near-dup epoch computes its MinHash signatures once; a small
+    epoch writes docs, _index and _neardup_index as one file each; and the
+    index increments hold exactly the admitted docs' digests."""
+    import glob
+    import hashlib
+
+    from substreams_sink_parquet_spark.llm import dedup
+    from substreams_sink_parquet_spark.streaming.corpus_stream import (
+        CorpusSink,
+        corpus_docs,
+    )
+
+    real = dedup.minhash_signatures
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", counted)
+
+    def text(i):
+        return " ".join(f"w{i}x{j}" for j in range(40))
+
+    def row(doc_id, t):
+        return (doc_id, t, "en", "w", len(t), None)
+
+    epochs = [
+        [row(i, text(i)) for i in range(20)],
+        [row(i, text(i)) for i in range(100, 120)]
+        + [row(200, text(0)),                               # exact dup
+           row(201, text(1).replace("w1x17", "edited")),   # near dup
+           row(202, "two words")],                          # unscreenable
+    ]
+    out = str(tmp_path / "out")
+    sink = CorpusSink(spark=spark, out_dir=out, near_dup=True)
+    for epoch_id, rows in enumerate(epochs):
+        before = len(calls)
+        sink.process_batch(spark.createDataFrame(rows, _DDL_R11), epoch_id)
+        assert len(calls) == before + 1
+    for sub in ("docs", "_index", "_neardup_index"):
+        files = glob.glob(os.path.join(out, sub, "epoch=1", "*.parquet"))
+        assert len(files) == 1, (sub, files)
+    admitted = corpus_docs(spark, out).filter("epoch = 1").select(
+        "doc_id", "text")
+    texts = {r.doc_id: r.text for r in admitted.collect()}
+    assert set(texts) == set(range(100, 120)) | {202}
+    index = spark.read.parquet(os.path.join(out, "_index", "epoch=1"))
+    assert sorted(r.text_hash for r in index.collect()) == sorted(
+        hashlib.md5(t.encode()).hexdigest() for t in texts.values())
+
+    def band_rows(df):
+        return sorted((r.band_id, r.band_hash, list(r.sig))
+                      for r in df.collect() if r.band_id is not None)
+
+    nd_index = spark.read.parquet(os.path.join(out, "_neardup_index", "epoch=1"))
+    assert band_rows(nd_index) == band_rows(dedup.banded_minhash(admitted))
