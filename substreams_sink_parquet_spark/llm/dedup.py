@@ -106,11 +106,12 @@ def incremental_dedup(new_docs: DataFrame, corpus_index: DataFrame,
     batch-size hashes), then a LEFT ANTI join against ``corpus_index`` —
     a hash-only column table the ingest job maintains, NOT the corpus
     text: the join moves 16-byte digests, never documents. At scale,
-    write the index bucketed by ``hash_col`` (layout.py) so the anti join
-    is a zero-shuffle sort-merge against the batch's one exchange; an
-    unbucketed index costs one shuffle of the hash column only. (The
-    broadcast shortcut does not apply: LEFT ANTI builds on the corpus
-    side, which is the huge one.)
+    write the index bucketed by ``hash_col`` (Spark's
+    ``DataFrameWriter.bucketBy``) so the anti join is a zero-shuffle
+    sort-merge against the batch's one exchange; an unbucketed index
+    costs one shuffle of the hash column only. (The broadcast shortcut
+    does not apply: LEFT ANTI builds on the corpus side, which is the
+    huge one.)
     """
     # a NULL text has no content hash and must not be ADMITTED through a
     # dedup gate (fail-closed, code review r12): the anti join cannot

@@ -25,19 +25,6 @@ def davg(col: Column | str, scale: str = "18,2") -> Column:
     return F.sum(c.cast(f"decimal({scale})")).cast("double") / F.count(c)
 
 
-def sql_dsum(expr: str, scale: str = "18,2") -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL({scale}))) AS DOUBLE)"
-
-
-def sql_davg(expr: str, scale: str = "18,2") -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL({scale}))) AS DOUBLE) / COUNT({expr})"
-
-
-def sql_count(alias: str = "cnt") -> str:
-    # DuckDB COUNT is already BIGINT; SUM over ints is HUGEINT and must be cast.
-    return f"COUNT(*) AS {alias}"
-
-
 def _top_level_fields(ddl: str) -> list[str]:
     """Field names of a DDL schema string, splitting only on top-level
     commas (nested ``array<struct<a:int, b:int>>`` commas don't count,

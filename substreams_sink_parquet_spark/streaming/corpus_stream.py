@@ -998,7 +998,8 @@ def compact_index(spark: SparkSession, out_dir: str, min_epochs: int = 2) -> boo
     embedding bucket). A long-running corpus build accumulates one small index file
     set per micro-batch per index — the classic small-file pathology; at
     scale, run this on a cadence (and write the result bucketed by the
-    join key so the per-batch joins co-locate — layout.py). Run ONLY
+    join key, Spark's ``DataFrameWriter.bucketBy``, so the per-batch
+    joins co-locate). Run ONLY
     against a stopped stream, the same single-writer discipline as sink
     compaction.
 

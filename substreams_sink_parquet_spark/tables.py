@@ -38,7 +38,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}

@@ -174,45 +174,6 @@ def test_compact_live_preserves_rows(spark, tmp_path):
     assert rows_after == rows_before == list(range(15))
 
 
-def test_streaming_with_rocksdb_state_store(spark, tmp_path):
-    """RocksDB is the 100 TB state-store setting — prove the provider loads
-    and checkpoints stateful aggregation state in this image."""
-    from substreams_sink_parquet_spark.streaming.stateful import (
-        watermarked_window_counts,
-    )
-
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    df = spark.createDataFrame(
-        [(0, "a", 1), (5, "a", 1), (65, "a", 1)], "sec long, kind string, value long"
-    ).selectExpr("timestamp_seconds(sec) AS ts", "kind", "value")
-    df.coalesce(1).write.mode("append").parquet(in_dir)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out: list = []
-        stream = spark.readStream.schema(df.schema).parquet(in_dir)
-        q = (
-            watermarked_window_counts(stream)
-            .writeStream.foreachBatch(lambda d, _e: out.extend(d.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert {(r.win_start, r.n) for r in out} == {(0, 2), (60, 1)}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: after a mid-batch crash the SAME epoch
     re-runs. The epoch-keyed overwrite in _append_live must make that replay
