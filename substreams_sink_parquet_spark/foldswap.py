@@ -3,9 +3,10 @@
 One shared implementation of the commit/recover pair used everywhere the
 engine folds per-batch ``epoch=N`` directories into one ``epoch=-1``:
 the continuous rollup (streaming/rollup.py), the corpus builder's dedup
-indexes (streaming/corpus_stream.py), and the ANN index's streaming code
-appends (llm/ann_index.py). The protocol (same family as
-sink/maintenance._commit_compact):
+indexes (streaming/corpus_stream.py), the ANN index's streaming code
+appends (llm/ann_index.py), and the block sink's live-area compaction
+(sink/maintenance.compact_live, one fold per range into
+``epoch=-1/range_start=N``). The protocol:
 
 1. The compactor writes the merged data ASIDE into a tmp dir under the
    root, then a ``_MERGED.json`` manifest naming the exact source epoch

@@ -18,15 +18,13 @@ single-writer discipline the reference assumes for its .partial files
 
 Crash safety: the multi-directory swap (delete N source epoch dirs, rename
 the compacted dir into place) cannot be atomic on a plain FS, so each range
-compaction is a tiny write-ahead commit. The compacted data is written to
-``_compact_{rs}`` together with a ``_MERGED.json`` manifest naming exactly
-the source dirs it merged; only then does the commit phase delete those
-sources and rename the tmp dir into ``epoch=-1``. The commit phase is
-idempotent (delete is, and the manifest pins the source set), so a crash
-anywhere is repaired by re-running it — ``compact_live`` recovers any
-committed-but-unswapped leftovers first. A tmp dir WITHOUT a manifest is an
-uncommitted partial write: its sources are untouched, so it is simply
-deleted. No crash point loses rows.
+compaction is a fold through :mod:`..foldswap`: the compacted data is
+written to ``_compact_{rs}``, a ``_MERGED.json`` manifest naming exactly the
+source dirs arms the commit, and ``commit_fold`` deletes those sources and
+renames the tmp dir to ``epoch=-1/range_start={rs}``. ``recover_fold``
+re-runs an armed commit and drops an unarmed (or torn-manifest) tmp, whose
+sources are intact — ``compact_live`` and the streaming sink's start-up
+recovery both run it first. No crash point loses rows.
 
 All file metadata operations go through the Hadoop FS layer (fsio), so the
 table dir may live on any supported object store.
@@ -38,11 +36,12 @@ import json
 
 from pyspark.sql import SparkSession
 
+from ..foldswap import FOLDED_EPOCH, commit_fold, recover_fold, write_fold_manifest
+from ..foldswap import MANIFEST as _MANIFEST  # noqa: F401 (the commit record's name)
 from ..fsio import HadoopFS, live_index as _shared_live_index, live_range_dirs, url_join
 from ..partition import file_name
 
 COMPACTED_EPOCH = -1
-_MANIFEST = "_MERGED.json"
 
 
 def _epoch_dirs(fs: HadoopFS, live: str) -> list[str]:
@@ -74,23 +73,12 @@ def live_file_counts(fs: HadoopFS, table_dir: str) -> dict[int, int]:
     return out
 
 
-def _commit_compact(fs: HadoopFS, live: str, rs: int, srcs: list[str]) -> None:
-    """Swap a fully-written ``_compact_{rs}`` dir into ``epoch=-1``. Every
-    step is idempotent, so this can be re-run from any crash point: deletes
-    are no-ops on missing dirs, and the manifest pins the exact source set
-    (re-listing after a partial delete would under-count)."""
-    tmp = url_join(live, f"_compact_{rs}")
-    for src in srcs:
-        fs.delete(src, recursive=True)
-    dst = url_join(live, f"epoch={COMPACTED_EPOCH}", f"range_start={rs}")
-    fs.mkdirs(url_join(live, f"epoch={COMPACTED_EPOCH}"))
-    fs.rename(tmp, dst)
-    # The manifest must outlive the rename: a _compact_ dir without one is
-    # treated as uncommitted (and deleted) by recovery. Dropped only now,
-    # from dst, where a crash-stranded copy is inert ("_"-prefixed files are
-    # invisible to the parquet reader and to live_file_counts).
-    fs.delete(url_join(dst, _MANIFEST), recursive=False)
-    for e in _epoch_dirs(fs, live):  # drop epochs emptied by the merge
+def _compacted(rs: int) -> str:
+    return f"{FOLDED_EPOCH}/range_start={rs}"
+
+
+def _drop_empty_epochs(fs: HadoopFS, live: str) -> None:
+    for e in _epoch_dirs(fs, live):  # epochs a fold's deletes emptied
         if not fs.listdir(url_join(live, e)):
             fs.delete(url_join(live, e), recursive=True)
 
@@ -98,27 +86,20 @@ def _commit_compact(fs: HadoopFS, live: str, rs: int, srcs: list[str]) -> None:
 def recover_compact_leftovers(fs: HadoopFS, table_dir: str) -> dict[str, str]:
     """Repair ``_compact_*`` leftovers from a crashed compact_live run.
 
-    Returns {tmp_dir_name: action}. A leftover WITH a ``_MERGED.json``
-    manifest finished its write — its commit phase is re-run to completion
-    (the rows may exist only there if the crash hit mid-swap). A leftover
-    WITHOUT one never committed — its sources are intact, so it is dropped."""
+    Returns {tmp_dir_name: action}: ``recover_fold`` re-runs the commit of
+    a leftover whose manifest armed it ("committed" — the rows may exist
+    only there if the crash hit mid-swap) and drops one that never armed
+    ("dropped_uncommitted" — its sources are intact)."""
     live = url_join(table_dir, "_live")
     actions: dict[str, str] = {}
-    if not fs.exists(live):
-        return actions
     for d in fs.listdir(live):
         if not d.startswith("_compact_"):
             continue
-        tmp = url_join(live, d)
-        manifest = url_join(tmp, _MANIFEST)
-        if fs.exists(manifest):
-            rs = int(d[len("_compact_"):])
-            srcs = json.loads(fs.read_bytes(manifest))["sources"]
-            _commit_compact(fs, live, rs, [url_join(live, s) for s in srcs])
-            actions[d] = "committed"
-        else:
-            fs.delete(tmp, recursive=True)
-            actions[d] = "dropped_uncommitted"
+        fs.mkdirs(url_join(live, FOLDED_EPOCH))
+        done = recover_fold(fs, live, d, _compacted(int(d[len("_compact_"):])))
+        actions[d] = "committed" if done == "committed" else "dropped_uncommitted"
+    if actions:
+        _drop_empty_epochs(fs, live)
     return actions
 
 
@@ -133,9 +114,9 @@ def compact_live(
 
     Returns {range_start: (files_before, files_after)}. Rows are preserved
     exactly; files come out block-sorted so later finalization keeps the
-    per-file ordering invariant. Crash-safe via the write-ahead manifest
-    protocol (module docstring); any leftovers from a previous crashed run
-    are recovered first."""
+    per-file ordering invariant. Crash-safe via the fold-and-swap protocol
+    (module docstring); any leftovers from a previous crashed run are
+    recovered first."""
     fs = HadoopFS(spark, table_dir)
     live = url_join(table_dir, "_live")
     recover_compact_leftovers(fs, table_dir)
@@ -149,23 +130,22 @@ def compact_live(
         # it one file's footer wins and the added column would be dropped
         # from the compacted output before its sources are deleted
         df = spark.read.option("mergeSchema", "true").parquet(*srcs)
-        tmp = url_join(live, f"_compact_{rs}")
+        tmp = f"_compact_{rs}"
         (
             df.repartition(target_files)
             .sortWithinPartitions("block_number")
             .write.mode("overwrite")
             .option("compression", compression)
-            .parquet(tmp)
+            .parquet(url_join(live, tmp))
         )
-        # Write point-of-no-return marker: from here the commit phase owns
-        # the swap and can be replayed from any crash point.
+        # point of no return: from here the fold's commit owns the swap
+        # and can be replayed from any crash point
         rel = [s[len(live) + 1:] for s in srcs]
-        fs.write_bytes(
-            url_join(tmp, _MANIFEST),
-            json.dumps({"range_start": rs, "sources": rel}).encode(),
-        )
-        _commit_compact(fs, live, rs, srcs)
-        dst = url_join(live, f"epoch={COMPACTED_EPOCH}", f"range_start={rs}")
+        write_fold_manifest(fs, url_join(live, tmp), rel)
+        fs.mkdirs(url_join(live, FOLDED_EPOCH))
+        commit_fold(fs, live, tmp, rel, _compacted(rs))
+        _drop_empty_epochs(fs, live)
+        dst = url_join(live, _compacted(rs))
         done[rs] = (n, sum(
             1 for f in fs.listdir(dst)
             if f.endswith(".parquet") and not f.startswith(("_", "."))

@@ -297,9 +297,9 @@ def compact_rollup(
     """Fold epoch partials into one (``epoch=-1``), bounding read cost on a
     long-running stream. Crash-safe: the merged partial is written aside to
     ``_merge_tmp`` with a manifest of the source epochs; the manifest
-    OUTLIVES the rename (same protocol as sink/maintenance._commit_compact
-    — deleting it earlier would make a crash between delete and rename look
-    like an uncommitted write and destroy the only copy). Interrupted swaps
+    OUTLIVES the rename (the foldswap protocol — deleting it earlier would
+    make a crash between delete and rename look like an uncommitted write
+    and destroy the only copy). Interrupted swaps
     are replayed by the next compact OR read.
 
     By default the highest-numbered epoch is NOT folded

@@ -32,6 +32,7 @@ so the lake root may be file://, s3a://, gs:// or abfs://.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +44,7 @@ from ..fsio import RANGE_FILES_MARKER, HadoopFS, live_index, live_range_dirs, ur
 from ..partition import range_start_col
 from ..schema import SchemaOptions
 from ..sink.explode import explode_all
+from ..sink.maintenance import recover_compact_leftovers, recover_tier_leftovers
 from ..sink.writer import (
     WriterOptions,
     _finalize,
@@ -107,6 +109,7 @@ class StreamingSink:
     def __post_init__(self) -> None:
         self._fs = HadoopFS(self.spark, self.out_dir)
         self._batch_ranges = 1  # set per batch by process_batch
+        self._needs_recovery = True  # see _recovering
 
     def _child_dirs(self) -> list[str]:
         if not self.explode:
@@ -117,139 +120,173 @@ class StreamingSink:
             if f.repeated and not f.is_map
         ]
 
+    def _table_dirs(self) -> list[str]:
+        return [self.out_dir] + self._child_dirs()
+
+    # -- crash recovery -----------------------------------------------------
+
+    @contextmanager
+    def _recovering(self, table_dirs: list[str] | None = None):
+        """Run :meth:`_recover` first when a crash can have left state
+        behind: before this sink's first call (a restarted process finds
+        whatever the dead one left), after any call on it raised, and on
+        every call that passes ``table_dirs`` (undo). A steady-state batch
+        probes nothing."""
+        try:
+            if table_dirs is not None or self._needs_recovery:
+                self._recover(table_dirs or self._table_dirs())
+                self._needs_recovery = False
+            yield
+        except BaseException:
+            self._needs_recovery = True
+            raise
+
+    def _recover(self, table_dirs: list[str]) -> None:
+        """Every block-lake crash repair, idempotent, per table: compaction
+        and tier leftovers (a committed fold's rows may sit only in a tmp
+        dir that backfill would paper over), stranded staging (a final part
+        may be a subset), undo markers (a final file may be stale) and live
+        rewrites (kept rows may sit only in the rewrite tmp)."""
+        for table_dir in table_dirs:
+            recover_compact_leftovers(self._fs, table_dir)
+            recover_tier_leftovers(self._fs, table_dir)
+            self._repair_stranded_finalize(table_dir)
+            self._repair_undo_markers(table_dir)
+            self._repair_live_rewrites(table_dir)
+
     # -- foreachBatch entry -------------------------------------------------
 
     def process_batch(self, raw_batch: DataFrame, epoch_id: int) -> None:
-        if self.opts.end_block is not None:
-            # --stop-block is exclusive: the reference's stream never
-            # delivers blocks past it; a misbehaving feeder must not be able
-            # to smuggle them into (or beyond) the clamped terminal range
-            raw_batch = raw_batch.filter(
-                F.col("block_number") < self.opts.end_block
-            )
-        if self.opts.start_block > 0:
-            # symmetric guard below the anchor: range_start_col (unlike the
-            # batch path's range_for, which raises) would silently assign a
-            # below-anchor range start, producing a rogue file outside the
-            # contiguity invariant
-            raw_batch = raw_batch.filter(
-                F.col("block_number") >= self.opts.start_block
-            )
-        # The holdback horizon needs max(block_number) over the RAW batch —
-        # decoded rows won't do: nil payloads are skipped at decode
-        # (sinker.go:158-160 parity), and a sparse module's tip blocks would
-        # then never advance the horizon. One aggregate over the pruned
-        # block_number column gives the horizon and, from the min, the
-        # number of ranges the append repartitions the batch into.
-        lo, hi = raw_batch.agg(
-            F.min("block_number"), F.max("block_number")
-        ).first()
-        if hi is not None:
-            self._max_seen = max(self._max_seen, int(hi))
-            start, size = self.opts.start_block, self.opts.partition_size
-            self._batch_ranges = (hi - start) // size - (lo - start) // size + 1
-        will_persist = (
-            (self.explode and bool(self._child_dirs()))
-            or self.rollup_spec is not None
-            or bool(self.profile_columns)
-        )
-        decoded = decode_payloads(raw_batch, self.spec, self.schema_opts)
-        if self.check_schema and not self._schema_checked:
-            # Cross-run guard the reference lacks: a resumed run whose .spkg
-            # (or SchemaOptions) drifted incompatibly from the lake's files
-            # must fail HERE, not mix irreconcilable footers. Additive
-            # field additions pass (merge_schema=True reads span them).
-            # One footer read per table, once per query lifetime.
-            ensure_schema_compatible(self.spark, self.out_dir, decoded.schema)
-            if self.explode:
-                for name, child in explode_all(decoded, self.spec).items():
-                    ensure_schema_compatible(
-                        self.spark, url_join(self.out_dir, name), child.schema
-                    )
-            self._schema_checked = True
-        if will_persist:
-            # each table write is its own action; without a persist the
-            # mapInPandas protobuf decode re-runs once per table (main +
-            # every exploded child, + the rollup partial) — the single most
-            # expensive stage in the batch, paid N times for no reason
-            decoded = decoded.persist()
-        try:
-            appends = [(decoded, self.out_dir)]
-            if self.explode:
-                for name, child in explode_all(decoded, self.spec).items():
-                    child_dir = url_join(self.out_dir, name)
-                    self._fs.mkdirs(child_dir)
-                    appends.append((child, child_dir))
-            workers = (
-                len(appends) if self.exploded_write_workers == 0
-                else min(self.exploded_write_workers, len(appends))
-            )
-            if len(appends) == 1 or workers <= 1:
-                for df, table_dir in appends:
-                    self._append_live(df, table_dir, epoch_id)
-            else:
-                # independent target directories: run the per-table append
-                # jobs concurrently. The persisted decode materializes once
-                # under whichever job reaches a partition first (the cache
-                # manager locks per partition), so this overlaps the child
-                # explode+write with the main write instead of paying the
-                # tables serially — the same shape a multi-sink cluster job
-                # would use.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    list(pool.map(
-                        lambda a: self._append_live(a[0], a[1], epoch_id),
-                        appends,
-                    ))
-            if self.profile_columns:
-                # decode is persisted whenever profiling is on: one extra
-                # sketch-aggregate job over cached partitions, writing a
-                # row-per-column epoch snapshot. Epoch-keyed overwrite =
-                # replay-idempotent (same contract as _append_live); the
-                # _STREAM_ID guard stops a fresh checkpoint's epoch 0 from
-                # silently replacing recorded history.
-                from ..operators.profiling import profile_table
-                from .rollup import guard_stream_id
-
-                profile_dir = url_join(self.out_dir, "_profile")
-                guard_stream_id(self._fs, profile_dir, self.stream_id,
-                                what="ingest-profile history")
-                prof = profile_table(decoded, self.profile_columns)
-                prof.coalesce(1).write.mode("overwrite").parquet(
-                    url_join(profile_dir, f"epoch={epoch_id}")
+        with self._recovering():
+            if self.opts.end_block is not None:
+                # --stop-block is exclusive: the reference's stream never
+                # delivers blocks past it; a misbehaving feeder must not be able
+                # to smuggle them into (or beyond) the clamped terminal range
+                raw_batch = raw_batch.filter(
+                    F.col("block_number") < self.opts.end_block
                 )
-            if self.rollup_spec is not None:
-                # decode is persisted whenever the rollup is on, so this is
-                # one tiny agg job over cached partitions
-                from .rollup import compact_rollup, write_rollup_partial
-
-                rollup_dir = url_join(self.out_dir, "_rollup")
-                write_rollup_partial(
-                    decoded,
-                    rollup_dir,
-                    self.rollup_spec,
-                    epoch_id,
-                    stream_id=self.stream_id,
+            if self.opts.start_block > 0:
+                # symmetric guard below the anchor: range_start_col (unlike the
+                # batch path's range_for, which raises) would silently assign a
+                # below-anchor range start, producing a rogue file outside the
+                # contiguity invariant
+                raw_batch = raw_batch.filter(
+                    F.col("block_number") >= self.opts.start_block
                 )
-                if (
-                    self.rollup_compact_every
-                    and epoch_id > 0
-                    and epoch_id % self.rollup_compact_every == 0
-                ):
-                    # safe mid-stream: the trailing (possibly uncommitted)
-                    # epoch is excluded, and foreachBatch serializes us —
-                    # the stream IS the single writer
-                    compact_rollup(
-                        self.spark, rollup_dir, self.rollup_spec,
-                        include_latest=False,
-                    )
-        finally:
+            # The holdback horizon needs max(block_number) over the RAW batch —
+            # decoded rows won't do: nil payloads are skipped at decode
+            # (sinker.go:158-160 parity), and a sparse module's tip blocks would
+            # then never advance the horizon. One aggregate over the pruned
+            # block_number column gives the horizon and, from the min, the
+            # number of ranges the append repartitions the batch into.
+            lo, hi = raw_batch.agg(
+                F.min("block_number"), F.max("block_number")
+            ).first()
+            if hi is not None:
+                self._max_seen = max(self._max_seen, int(hi))
+                start, size = self.opts.start_block, self.opts.partition_size
+                self._batch_ranges = (hi - start) // size - (lo - start) // size + 1
+            will_persist = (
+                (self.explode and bool(self._child_dirs()))
+                or self.rollup_spec is not None
+                or bool(self.profile_columns)
+            )
+            decoded = decode_payloads(raw_batch, self.spec, self.schema_opts)
+            if self.check_schema and not self._schema_checked:
+                # Cross-run guard the reference lacks: a resumed run whose .spkg
+                # (or SchemaOptions) drifted incompatibly from the lake's files
+                # must fail HERE, not mix irreconcilable footers. Additive
+                # field additions pass (merge_schema=True reads span them).
+                # One footer read per table, once per query lifetime.
+                ensure_schema_compatible(self.spark, self.out_dir, decoded.schema)
+                if self.explode:
+                    for name, child in explode_all(decoded, self.spec).items():
+                        ensure_schema_compatible(
+                            self.spark, url_join(self.out_dir, name), child.schema
+                        )
+                self._schema_checked = True
             if will_persist:
-                decoded.unpersist()
-        self._finalize_ready(self.out_dir)
-        for child_dir in self._child_dirs():
-            self._finalize_ready(child_dir)
+                # each table write is its own action; without a persist the
+                # mapInPandas protobuf decode re-runs once per table (main +
+                # every exploded child, + the rollup partial) — the single most
+                # expensive stage in the batch, paid N times for no reason
+                decoded = decoded.persist()
+            try:
+                appends = [(decoded, self.out_dir)]
+                if self.explode:
+                    for name, child in explode_all(decoded, self.spec).items():
+                        child_dir = url_join(self.out_dir, name)
+                        self._fs.mkdirs(child_dir)
+                        appends.append((child, child_dir))
+                workers = (
+                    len(appends) if self.exploded_write_workers == 0
+                    else min(self.exploded_write_workers, len(appends))
+                )
+                if len(appends) == 1 or workers <= 1:
+                    for df, table_dir in appends:
+                        self._append_live(df, table_dir, epoch_id)
+                else:
+                    # independent target directories: run the per-table append
+                    # jobs concurrently. The persisted decode materializes once
+                    # under whichever job reaches a partition first (the cache
+                    # manager locks per partition), so this overlaps the child
+                    # explode+write with the main write instead of paying the
+                    # tables serially — the same shape a multi-sink cluster job
+                    # would use.
+                    from concurrent.futures import ThreadPoolExecutor
+
+                    with ThreadPoolExecutor(max_workers=workers) as pool:
+                        list(pool.map(
+                            lambda a: self._append_live(a[0], a[1], epoch_id),
+                            appends,
+                        ))
+                if self.profile_columns:
+                    # decode is persisted whenever profiling is on: one extra
+                    # sketch-aggregate job over cached partitions, writing a
+                    # row-per-column epoch snapshot. Epoch-keyed overwrite =
+                    # replay-idempotent (same contract as _append_live); the
+                    # _STREAM_ID guard stops a fresh checkpoint's epoch 0 from
+                    # silently replacing recorded history.
+                    from ..operators.profiling import profile_table
+                    from .rollup import guard_stream_id
+
+                    profile_dir = url_join(self.out_dir, "_profile")
+                    guard_stream_id(self._fs, profile_dir, self.stream_id,
+                                    what="ingest-profile history")
+                    prof = profile_table(decoded, self.profile_columns)
+                    prof.coalesce(1).write.mode("overwrite").parquet(
+                        url_join(profile_dir, f"epoch={epoch_id}")
+                    )
+                if self.rollup_spec is not None:
+                    # decode is persisted whenever the rollup is on, so this is
+                    # one tiny agg job over cached partitions
+                    from .rollup import compact_rollup, write_rollup_partial
+
+                    rollup_dir = url_join(self.out_dir, "_rollup")
+                    write_rollup_partial(
+                        decoded,
+                        rollup_dir,
+                        self.rollup_spec,
+                        epoch_id,
+                        stream_id=self.stream_id,
+                    )
+                    if (
+                        self.rollup_compact_every
+                        and epoch_id > 0
+                        and epoch_id % self.rollup_compact_every == 0
+                    ):
+                        # safe mid-stream: the trailing (possibly uncommitted)
+                        # epoch is excluded, and foreachBatch serializes us —
+                        # the stream IS the single writer
+                        compact_rollup(
+                            self.spark, rollup_dir, self.rollup_spec,
+                            include_latest=False,
+                        )
+            finally:
+                if will_persist:
+                    decoded.unpersist()
+            for table_dir in self._table_dirs():
+                self._finalize_ready(table_dir)
 
     def _append_live(self, df: DataFrame, table_dir: str, epoch_id: int) -> None:
         """Stage the epoch's rows as ``write_ranges`` stages them — one
@@ -429,17 +466,8 @@ class StreamingSink:
         file the append wrote (a marked epoch) is renamed into place by
         ``_finalize``, metadata only. The rest (several epochs, compacted
         ``epoch=-1`` or demoted ``epoch=-2`` rows, an unmarked epoch) are
-        merged through ``write_ranges`` in one Spark job."""
-        # crash repairs BEFORE the existence guard below (code review r12):
-        # a stranded _staging(_resplit) means a pre-crash merge or re-split
-        # never finished its renames (its live sources are intact — they are
-        # deleted only after _finalize returns), so a final part file the
-        # guard would probe may be an incomplete SUBSET; a stranded
-        # _undo_markers entry means a demotion crashed and the probed file
-        # may be a STALE pre-reorg file. Both repairs converge the lake so
-        # the guard's existence probe is trustworthy.
-        self._repair_stranded_finalize(table_dir)
-        self._repair_undo_markers(table_dir)
+        merged through ``write_ranges`` in one Spark job. Crash repair ran
+        before this sink's first batch and after any raise (_recovering)."""
         live = url_join(table_dir, "_live")
         marked: set[str] = set()
         idx = live_index(self._fs, live, marked)
@@ -455,9 +483,9 @@ class StreamingSink:
         # earlier epochs' rows. The replayed live rows are a subset of
         # what that finalize already wrote, so drop them and skip the
         # range. The undo path cannot collide with this rule: demotion
-        # writes a marker before touching the range, and the marker repair
-        # above deletes the stale finalized file (re-demoting first when
-        # the crash predates the demotion) before this probe runs.
+        # writes a marker before touching the range, and recovery's marker
+        # repair deletes the stale finalized file (re-demoting first when
+        # the crash predates the demotion) before this probe can run.
         def finalized(rs: int) -> bool:
             base = file_name(rs, self._range_end(rs), self.opts.pad)
             part0 = base[: -len(".parquet")] + "-part0000.parquet"
@@ -511,9 +539,9 @@ class StreamingSink:
         natural end (--stop-block reached, or availableNow drain complete):
         a mid-stream restart should instead leave live ranges in place for
         the resumed query to keep appending to."""
-        self._finalize_ready(self.out_dir, force=True)
-        for child_dir in self._child_dirs():
-            self._finalize_ready(child_dir, force=True)
+        with self._recovering():
+            for table_dir in self._table_dirs():
+                self._finalize_ready(table_dir, force=True)
 
     # -- reorg --------------------------------------------------------------
 
@@ -538,14 +566,22 @@ class StreamingSink:
 
         Crash safety: each retracted group is covered by a marker under
         ``_undo_markers/`` written before any mutation and removed after
-        the group's files are deleted, so a crash at ANY point converges —
-        on the next undo run, the next finalize pass, or a plain stream
-        restart — via :meth:`_repair_undo_markers`, never a loss and never
-        a stale pre-reorg file left serving (code review r12)."""
-        for table_dir in [self.out_dir] + self._child_dirs():
-            self._undo_finalized(table_dir, last_valid_block)
-            self._undo_live(table_dir, last_valid_block)
-        self._retract_rollup(last_valid_block)
+        the group's files are deleted, and a live range is rewritten aside
+        before its source is replaced. Every undo starts with
+        :meth:`_recover`, and so does a restarted sink's first batch or
+        ``close``, so a crash at ANY point converges on the next undo or
+        the next start — never a loss and never a stale pre-reorg file
+        left serving (code review r12)."""
+        self._undo(self._table_dirs(), last_valid_block)
+
+    def _undo(self, table_dirs: list[str], last_valid_block: int) -> None:
+        with self._recovering(table_dirs):
+            for table_dir in table_dirs:
+                self._undo_finalized(table_dir, last_valid_block)
+                self._undo_live(table_dir, last_valid_block)
+            # _rollup/ in lockstep, offline too (it reloads _SPEC.json):
+            # the re-fed partials would otherwise double-count
+            self._retract_rollup(last_valid_block)
         self._max_seen = min(self._max_seen, last_valid_block)
 
     def _retract_rollup(self, last_valid_block: int) -> None:
@@ -591,28 +627,28 @@ class StreamingSink:
             self.spark, rollup_dir, spec, last_valid_block, rescan
         )
 
+    def _repair_live_rewrites(self, table_dir: str) -> None:
+        """Finish or drop a crashed ``_undo_live`` rewrite (code review
+        r11). Every reader skips the "_"-prefixed tmp, but a crash between
+        delete(src) and the rename leaves the kept rows ONLY there. src
+        missing → the tmp is complete (src is deleted only after the write
+        returns): rename it into place; src present → drop the tmp."""
+        live = url_join(table_dir, "_live")
+        for e in self._fs.listdir(live):
+            if not e.startswith("epoch="):
+                continue
+            ep = url_join(live, e)
+            for name in self._fs.listdir(ep):
+                if not name.startswith("_rewrite_range_start="):
+                    continue
+                src = url_join(ep, name[len("_rewrite_"):])
+                if self._fs.exists(src):
+                    self._fs.delete(url_join(ep, name), recursive=True)
+                else:
+                    self._fs.rename(url_join(ep, name), src)
+
     def _undo_live(self, table_dir: str, last_valid_block: int) -> None:
         live = url_join(table_dir, "_live")
-        # repair stranded rewrite staging from a crashed prior undo (code
-        # review r11): the tmp dir is "_"-prefixed so every reader —
-        # live_index's range_start= prefix filter AND Spark/Hadoop's
-        # hidden-path rule — skips it, but a crash in the delete→rename
-        # window leaves the kept rows ONLY there. src missing → the tmp
-        # is a complete committed rewrite (the delete only runs after the
-        # write returns): rename it into place and let this undo re-derive
-        # from it; src present → the original survived, drop the tmp.
-        if self._fs.exists(live):
-            for e in self._fs.listdir(live):
-                ep = url_join(live, e)
-                for name in self._fs.listdir(ep):
-                    if not name.startswith("_rewrite_range_start="):
-                        continue
-                    src = url_join(
-                        ep, name[len("_rewrite_"):])
-                    if self._fs.exists(src):
-                        self._fs.delete(url_join(ep, name), recursive=True)
-                    else:
-                        self._fs.rename(url_join(ep, name), src)
         idx = self._live_index(live)
         for rs in self._live_ranges(idx):
             for src in self._range_dirs(idx, live, rs):
@@ -644,8 +680,8 @@ class StreamingSink:
                 # range_start=N_rewrite matches live_index's prefix filter
                 # and int()-poisons every later listing if a crash strands
                 # it — while an underscore prefix is invisible to both
-                # live_index and Spark's hidden-path rule, and the repair
-                # pre-pass above converges it on the next undo run
+                # live_index and Spark's hidden-path rule, and
+                # _repair_live_rewrites converges it at the next recovery
                 parent, base = src.rsplit("/", 1)
                 tmp = url_join(parent, "_rewrite_" + base)
                 # one block-sorted file, like the append wrote: the epoch's
@@ -698,13 +734,6 @@ class StreamingSink:
             kept.unpersist()
 
     def _undo_finalized(self, table_dir: str, last_valid_block: int) -> None:
-        # converge any previously-crashed finalize/undo first: a stranded
-        # _staging's partially-renamed final parts would otherwise be read
-        # as demotable groups (duplicating rows the intact live dirs still
-        # hold), and a stranded marker's group must finish its crashed
-        # demotion before new groups are computed (code review r12)
-        self._repair_stranded_finalize(table_dir)
-        self._repair_undo_markers(table_dir)
         groups: dict[tuple[int, int], list[str]] = {}
         for name in self._fs.listdir(table_dir):
             parsed = _split_range_name(name)
@@ -799,15 +828,7 @@ def undo_lake(
     sink = StreamingSink(
         spark=spark, spec=None, out_dir=out_dir, opts=opts or WriterOptions()
     )
-    for table_dir in lake_table_dirs(sink._fs, out_dir):
-        sink._undo_finalized(table_dir, last_valid_block)
-        sink._undo_live(table_dir, last_valid_block)
-    # keep _rollup/ in lockstep too (code review r11): _retract_rollup
-    # reloads the persisted _SPEC.json precisely so this offline path can
-    # retract without a RollupSpec in hand — skipping it left the rollup
-    # serving bucket totals that still included the retracted blocks, and
-    # the restarted stream's re-fed partials then double-counted them
-    sink._retract_rollup(last_valid_block)
+    sink._undo(lake_table_dirs(sink._fs, out_dir), last_valid_block)
 
 
 def run_pipeline(
@@ -851,21 +872,7 @@ def run_pipeline(
         profile_columns=profile_columns,
     )
     sink._fs.mkdirs(out_dir)
-    # Repair any _compact_* leftover from a compaction run that crashed
-    # mid-swap BEFORE streaming resumes: the live index only matches
-    # epoch=* entries, so a committed-but-unswapped compaction dir would
-    # otherwise be invisible — its range drops out of the index and the
-    # contiguity backfill would paper over it with an EMPTY range file
-    # while the real rows sit stranded.
-    # Same hazard for _tier_* leftovers (tier_finalized crashing after its
-    # commit deleted the source range files but before the rename): the
-    # sources are gone, so span-aware backfill would fabricate EMPTY files
-    # over their blocks while the merged rows sit stranded in the tmp dir.
-    from ..sink.maintenance import recover_compact_leftovers, recover_tier_leftovers
-
-    for table_dir in [out_dir] + sink._child_dirs():
-        recover_compact_leftovers(sink._fs, table_dir)
-        recover_tier_leftovers(sink._fs, table_dir)
+    # crash repair runs in the sink, before its first batch (_recovering)
     from ..sources.staging import raw_stream
 
     stream = raw_stream(spark, input_dir, max_files_per_trigger=max_files_per_trigger)

@@ -1139,3 +1139,147 @@ def test_rename_finalize_crash_then_replay_converges(spark, tmp_path,
     assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
     live = os.path.join(out_dir, "_live")
     assert not os.path.exists(live) or os.listdir(live) == []
+
+
+def test_restart_after_crashed_undo_rewrite_keeps_rows(spark, tmp_path):
+    """An undo that crashed between its live rewrite's delete(src) and
+    rename leaves the kept rows only in ``_rewrite_range_start=N``. A plain
+    restart, with no further undo, must put them back before its first
+    batch: finalizing from the re-fed rows alone wrote the range without
+    them, and the emptied-epoch sweep then deleted their only copy."""
+    import glob
+    import shutil
+
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    opts = WriterOptions(partition_size=10, start_block=0)
+    StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir, opts=opts,
+                  undo_holdback=1000).process_batch(
+        _blocks_df(spark, list(range(6))), epoch_id=0)
+    # the crash window of undo(3): the filtered rewrite is committed aside,
+    # the source is deleted, the rename never ran
+    epoch = os.path.join(out_dir, "_live", "epoch=0")
+    src = os.path.join(epoch, "range_start=0")
+    spark.read.parquet(src).filter(F.col("block_number") <= 3).coalesce(
+        1).write.parquet(os.path.join(epoch, "_rewrite_range_start=0"))
+    shutil.rmtree(src)
+
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir, opts=opts,
+                         undo_holdback=0)
+    sink.process_batch(_blocks_df(spark, [4, 5, 6, 7, 8, 9, 15]), epoch_id=1)
+    got = pq.read_table(
+        os.path.join(out_dir, "0000000000-0000000010.parquet")
+    ).column("block_number").to_pylist()
+    assert got == list(range(10))  # blocks 0..3 survived, each row once
+    assert not glob.glob(os.path.join(out_dir, "_live", "*", "_rewrite_*"))
+
+
+def test_torn_compact_manifest_does_not_wedge_restart(spark, tmp_path):
+    """A compaction that crashed while writing its ``_MERGED.json`` never
+    armed its commit (the manifest is written last), so its sources are
+    intact. A restart must drop the tmp dir and keep every row, not raise
+    JSONDecodeError on every start."""
+    import glob
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS, url_join
+
+    input_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ck")
+    opts = WriterOptions(partition_size=10, start_block=0)
+    _stage_blocks(spark, input_dir, list(range(0, 8)), 0)
+    q, _ = run_pipeline(spark, input_dir, out, BLOCK, ckpt, opts=opts,
+                        undo_holdback=100)  # holdback keeps range 0 live
+    q.awaitTermination(120)
+    tmp_dir = url_join(out, "_live", "_compact_0")
+    spark.read.parquet(
+        *glob.glob(os.path.join(out, "_live", "epoch=*", "range_start=0"))
+    ).coalesce(1).write.parquet(tmp_dir)
+    HadoopFS(spark, out).write_bytes(
+        url_join(tmp_dir, "_MERGED.json"), b'{"sources": ["epoch=0/ran'
+    )
+
+    _stage_blocks(spark, input_dir, list(range(8, 25)), 1)
+    q, sink = run_pipeline(spark, input_dir, out, BLOCK, ckpt, opts=opts)
+    q.awaitTermination(120)
+    sink.close()
+    blocks = sorted(
+        b
+        for f in _final_files(out)
+        for b in pq.read_table(
+            os.path.join(out, f)
+        ).column("block_number").to_pylist()
+    )
+    assert blocks == list(range(25))
+    assert not os.path.exists(tmp_dir)
+
+
+def test_repairs_probe_only_at_start_and_after_a_raise(spark, tmp_path,
+                                                       monkeypatch):
+    """Crash repair runs only where a crash can have left state behind:
+    before a sink's first batch and after a call on it raised. Steady-state
+    batches never probe ``_staging``, ``_staging_resplit`` or
+    ``_undo_markers``; after a raise the next call on the SAME sink
+    repairs first, and its replay converges."""
+    import pytest
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+    from substreams_sink_parquet_spark.sink.writer import lake_coverage
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                         opts=WriterOptions(partition_size=10, start_block=0))
+    probes = []
+    repair_dirs = ("_staging", "_staging_resplit", "_undo_markers")
+
+    def spy(orig):
+        def call(self, url):
+            if url.rstrip("/").rsplit("/", 1)[-1] in repair_dirs:
+                probes.append(url)
+            return orig(self, url)
+        return call
+
+    monkeypatch.setattr(HadoopFS, "exists", spy(HadoopFS.exists))
+    monkeypatch.setattr(HadoopFS, "listdir", spy(HadoopFS.listdir))
+
+    def batch(blocks, epoch_id):
+        probes.clear()
+        sink.process_batch(_blocks_df(spark, list(blocks)), epoch_id)
+        return len(probes)
+
+    # every range completes inside its batch, so finalize only renames and
+    # never stages: any probe of those dirs is a repair
+    assert batch(range(0, 10), 0) > 0
+    assert batch(range(10, 20), 1) == 0
+    assert batch(range(20, 30), 2) == 0
+
+    def first_move_then_crash(self, moves):
+        self.rename(*list(moves)[0])
+        raise IOError("crash after the first rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(HadoopFS, "rename_all", first_move_then_crash)
+        with pytest.raises(IOError, match="first rename"):
+            batch(range(30, 50), 3)
+    assert batch(range(30, 50), 3) > 0
+    blocks = sorted(
+        b
+        for f in _final_files(out_dir)
+        for b in pq.read_table(
+            os.path.join(out_dir, f)
+        ).column("block_number").to_pylist()
+    )
+    assert blocks == list(range(50))
+    assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
