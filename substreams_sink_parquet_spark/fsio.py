@@ -227,8 +227,8 @@ class HadoopFS:
 RANGE_FILES_MARKER = "_RANGE_FILES"
 
 
-def live_index(fs: "HadoopFS", live: str,
-               marked: set[str] | None = None) -> dict[str, list[int]]:
+def live_index(fs: "HadoopFS", live: str, marked: set[str] | None = None,
+               epochs: list[str] | None = None) -> dict[str, list[int]]:
     """ONE listing sweep over a ``_live`` staging area: {epoch dir name:
     sorted range starts}. Shared by the streaming sink's per-batch pass and
     offline compaction so a micro-batch (or maintenance run) costs
@@ -236,9 +236,10 @@ def live_index(fs: "HadoopFS", live: str,
     holdback and a fast trigger that difference is thousands of
     driver-to-store round-trips per batch."""
     # ``marked``, if given, collects the epochs whose dir holds
-    # RANGE_FILES_MARKER — from the same listing
+    # RANGE_FILES_MARKER — from the same listing. ``epochs``, if given,
+    # lists only those epoch dirs instead of the whole area.
     idx: dict[str, list[int]] = {}
-    for e in fs.listdir(live):
+    for e in fs.listdir(live) if epochs is None else epochs:
         if not e.startswith("epoch="):
             continue
         names = fs.listdir(url_join(live, e))

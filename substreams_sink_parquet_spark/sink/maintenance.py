@@ -40,6 +40,7 @@ from ..foldswap import FOLDED_EPOCH, commit_fold, recover_fold, write_fold_manif
 from ..foldswap import MANIFEST as _MANIFEST  # noqa: F401 (the commit record's name)
 from ..fsio import HadoopFS, live_index as _shared_live_index, live_range_dirs, url_join
 from ..partition import file_name
+from .writer import _read_range_dirs
 
 COMPACTED_EPOCH = -1
 
@@ -60,14 +61,16 @@ def _range_dirs(fs: HadoopFS, live: str, rs: int,
 
 
 def live_file_counts(fs: HadoopFS, table_dir: str) -> dict[int, int]:
-    """{range_start: parquet file count across all epochs} for the live area."""
+    """{range_start: parquet file count across all epochs} for the live area
+    (a ``write_tasks`` range dir holds one file per ``__sub=K`` dir)."""
     live = url_join(table_dir, "_live")
     out: dict[int, int] = {}
     for e, rss in _live_index(fs, live).items():
         for rs in rss:
             n = sum(
                 1 for f in fs.listdir(url_join(live, e, f"range_start={rs}"))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
+                if f.startswith("__sub=")
+                or (f.endswith(".parquet") and not f.startswith(("_", ".")))
             )
             out[rs] = out.get(rs, 0) + n
     return out
@@ -126,10 +129,7 @@ def compact_live(
         if n < min_files:
             continue
         srcs = _range_dirs(fs, live, rs, idx)
-        # mergeSchema: epochs may span an additive schema upgrade; without
-        # it one file's footer wins and the added column would be dropped
-        # from the compacted output before its sources are deleted
-        df = spark.read.option("mergeSchema", "true").parquet(*srcs)
+        df = _read_range_dirs(spark, srcs)
         tmp = f"_compact_{rs}"
         (
             df.repartition(target_files)

@@ -12,8 +12,11 @@ backfills empty ranges for gaps (writer.go:220-267) so the lake is contiguous
 from the configured anchor.
 
 The streaming sink shares this one range writer: its live append is this
-staging write (one block-sorted file per range per epoch) and its finalize
-renames those files with :func:`_finalize`, so a row is written once.
+staging write (one block-sorted file per range per epoch, or per ``__sub=K``
+block sub-range under ``write_tasks``) and its finalize renames those files
+with :func:`_finalize`. The batch that makes a range ready writes it whole,
+earlier epochs' live rows included, so a finalize on a batch never rewrites
+rows; a row that arrives in the range's last batch is written once.
 
 Store abstraction: all metadata operations (rename, list, backfill touch) go
 through :mod:`..fsio` — the Hadoop FileSystem API — so the lake root may be
@@ -348,6 +351,21 @@ def _finalize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
     return written
 
 
+def _read_range_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """The rows of staged or live range dirs, as data columns only.
+    recursiveFileLookup reads the files themselves: a ``write_tasks`` range
+    dir nests its files under ``__sub=K``, Spark refuses to infer partitions
+    over a mix of nested and flat dirs, and no ``__sub``, ``epoch`` or
+    ``range_start`` column leaks into the rows. mergeSchema: sources of
+    different epochs may span an additive schema upgrade — without it one
+    file's footer wins and the added column is silently dropped."""
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("mergeSchema", "true")
+        .parquet(*dirs)
+    )
+
+
 def _split_oversize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
                     out_dir: str, oversize: dict[int, int], opts: WriterOptions,
                     block_col: str) -> list[str]:
@@ -359,17 +377,10 @@ def _split_oversize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
         max(1, math.ceil(sz / opts.target_file_bytes)) for sz in oversize.values()
     )
     resplit_dir = url_join(out_dir, "_staging_resplit")
-    # drop the write_tasks sub-bucket partition column if the staged layout
-    # carries one — it must not leak into the re-split files as data.
-    # mergeSchema: live sources of different epochs may span an additive
-    # schema upgrade
-    df = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[sources[rs] for rs in oversize])
-        .drop("__sub")
-        .withColumn("__range_start",
-                    range_start_col(block_col, opts.start_block, opts.partition_size))
-    )
+    df = _read_range_dirs(
+        spark, [sources[rs] for rs in oversize]
+    ).withColumn("__range_start",
+                 range_start_col(block_col, opts.start_block, opts.partition_size))
     writer = (
         df.repartitionByRange(total_parts, "__range_start", block_col)
         .sortWithinPartitions("__range_start", block_col)

@@ -23,8 +23,11 @@ Reference translation (SURVEY.md §3.1):
   ``--stop-block`` run's terminal clamped range could never satisfy the
   holdback inequality and would sit in ``_live/`` forever.
 - .partial → final rename (writer.go:80-85): the live area holds one
-  block-sorted file per range per epoch, and finalize renames it into place;
-  only a range spanning several live sources is merged (``write_ranges``).
+  block-sorted file per range per epoch, and finalize renames it into place.
+  A batch that makes a range ready reads that range's earlier live rows into
+  its own append, so every range is written whole by one batch and a batch's
+  finalize only renames; ``write_ranges`` merges only at ``close`` (a range
+  with several live sources) and for unmarked or hand-staged dirs.
 
 All file metadata operations go through :mod:`..fsio` (Hadoop FileSystem),
 so the lake root may be file://, s3a://, gs:// or abfs://.
@@ -41,7 +44,7 @@ from pyspark.sql import functions as F
 from .. import protowire as pw
 from ..decode import decode_payloads
 from ..fsio import RANGE_FILES_MARKER, HadoopFS, live_index, live_range_dirs, url_join
-from ..partition import range_start_col
+from ..partition import range_for, range_start_col
 from ..schema import SchemaOptions
 from ..sink.explode import explode_all
 from ..sink.maintenance import recover_compact_leftovers, recover_tier_leftovers
@@ -49,6 +52,7 @@ from ..sink.writer import (
     WriterOptions,
     _finalize,
     _range_end as _writer_range_end,
+    _read_range_dirs,
     _split_range_name,
     _stage_partitioning,
     backfill_empty,
@@ -65,8 +69,10 @@ class StreamingSink:
 
     Layout under ``out_dir``:
       - ``_live/epoch=E/range_start=N/`` rows of not-yet-final ranges
-        (re-writable on reorg): one block-sorted file per range per epoch,
-        which finalize renames into place;
+        (re-writable on reorg): one block-sorted file per range per epoch
+        (one per ``__sub=K`` dir under ``write_tasks``). The epoch that
+        makes a range ready holds all of its rows, earlier epochs' included,
+        and finalize renames that file into place;
       - ``{rs:010d}-{re:010d}.parquet`` finalized immutable range files.
     """
 
@@ -108,7 +114,11 @@ class StreamingSink:
 
     def __post_init__(self) -> None:
         self._fs = HadoopFS(self.spark, self.out_dir)
-        self._batch_ranges = 1  # set per batch by process_batch
+        # per batch: the batch's first and last range start (None when it
+        # is empty), set by process_batch; and per table, the live index
+        # and absorbed ranges _append_live hands to _finalize_ready
+        self._batch_span: tuple[int, int] | None = None
+        self._handoff: dict[str, tuple] = {}
         self._needs_recovery = True  # see _recovering
 
     def _child_dirs(self) -> list[str]:
@@ -178,14 +188,16 @@ class StreamingSink:
             # (sinker.go:158-160 parity), and a sparse module's tip blocks would
             # then never advance the horizon. One aggregate over the pruned
             # block_number column gives the horizon and, from the min, the
-            # number of ranges the append repartitions the batch into.
+            # ranges the append repartitions the batch into.
             lo, hi = raw_batch.agg(
                 F.min("block_number"), F.max("block_number")
             ).first()
+            self._batch_span, self._handoff = None, {}
             if hi is not None:
                 self._max_seen = max(self._max_seen, int(hi))
                 start, size = self.opts.start_block, self.opts.partition_size
-                self._batch_ranges = (hi - start) // size - (lo - start) // size + 1
+                self._batch_span = (range_for(lo, start, size)[0],
+                                    range_for(hi, start, size)[0])
             will_persist = (
                 (self.explode and bool(self._child_dirs()))
                 or self.rollup_spec is not None
@@ -290,33 +302,77 @@ class StreamingSink:
 
     def _append_live(self, df: DataFrame, table_dir: str, epoch_id: int) -> None:
         """Stage the epoch's rows as ``write_ranges`` stages them — one
-        block-sorted file per range under ``_live/epoch={id}/range_start=N/``
-        — and mark the epoch dir so finalize may rename them into place (a
-        ``write_tasks`` sub-split leaves several files: unmarked, merged).
+        block-sorted file per range (per ``__sub=K`` under ``write_tasks``)
+        under ``_live/epoch={id}/range_start=N/`` — and mark the epoch dir
+        so finalize may rename them into place.
+
+        A range that is ready at the end of this batch and has rows in
+        earlier live sources is ABSORBED: those rows are read into this
+        write, so the epoch's file for it is complete and finalize only
+        renames it — no range is rewritten after its batch. Not absorbed:
+        a range the replay guard finds finalized, and one whose only
+        source is a marked file while this batch has no rows in it (that
+        file is renamed as it stands).
+
         OVERWRITES the epoch directory: foreachBatch is at-least-once, and
         after a mid-batch crash the same epoch re-runs; an append-mode write
         would duplicate every row the first attempt got out, while the
         epoch-keyed overwrite makes the replay idempotent (the batchId-based
-        dedup contract). Committed epochs never re-run."""
+        dedup contract). Committed epochs never re-run.
+
+        Crash safety of absorption: this epoch's file for an absorbed range
+        is a superset of the sources it absorbed, and finalize deletes those
+        sources only after the rename. A crash before then replays this
+        epoch: the replay's listing leaves its own epoch dir out of the
+        sources, absorbs the same still-present sources again and
+        overwrites the dir; once the rename has happened the replay guard
+        drops the range instead."""
+        live = url_join(table_dir, "_live")
+        own = f"epoch={epoch_id}"
+        marked: set[str] = set()
+        idx = live_index(self._fs, live, marked)
+        idx.pop(own, None)  # a replay overwrites it: never its own source
+        guard = {rs: self._finalized(table_dir, rs)
+                 for rs in self._ready_ranges(idx)}
+        span = self._batch_span
+
+        def in_batch(rs: int) -> bool:
+            return span is not None and span[0] <= rs <= span[1]
+
+        absorbed: dict[int, list[str]] = {}
+        for rs, done in guard.items():
+            srcs = self._range_dirs(idx, live, rs)
+            if not done and (in_batch(rs) or len(srcs) > 1
+                             or srcs[0].split("/")[-2] not in marked):
+                absorbed[rs] = srcs
+        if absorbed:
+            df = df.unionByName(
+                _read_range_dirs(self.spark, [d for ds in absorbed.values()
+                                              for d in ds]),
+                allowMissingColumns=True,
+            )
+        n_ranges = sum(1 for rs in absorbed if not in_batch(rs))
+        if span is not None:
+            n_ranges += (span[1] - span[0]) // self.opts.partition_size + 1
         ranged = df.withColumn(
             "__range_start",
             range_start_col("block_number", self.opts.start_block, self.opts.partition_size),
         )
         staged, part_cols = _stage_partitioning(
-            ranged, self._batch_ranges, self.opts, "block_number"
+            ranged, max(n_ranges, 1), self.opts, "block_number"
         )
         writer = (
             staged.sortWithinPartitions(*part_cols, "block_number")
-            .drop("__sub")
             .withColumnRenamed("__range_start", "range_start")
             .write.mode("overwrite")
         )
         for k, v in parquet_write_options(self.opts).items():
             writer = writer.option(k, v)
-        epoch_dir = url_join(table_dir, "_live", f"epoch={epoch_id}")
-        writer.partitionBy("range_start").parquet(epoch_dir)
-        if "__sub" not in part_cols:
-            self._fs.write_bytes(url_join(epoch_dir, RANGE_FILES_MARKER), b"")
+        epoch_dir = url_join(live, own)
+        writer.partitionBy(*["range_start" if c == "__range_start" else c
+                             for c in part_cols]).parquet(epoch_dir)
+        self._fs.write_bytes(url_join(epoch_dir, RANGE_FILES_MARKER), b"")
+        self._handoff[table_dir] = (own, idx, marked, set(absorbed), guard)
 
     # -- finalize -----------------------------------------------------------
 
@@ -460,20 +516,34 @@ class StreamingSink:
             self._fs.delete(marker, recursive=False)
         self._fs.delete(markers_dir, recursive=True)
 
+    def _finalized(self, table_dir: str, rs: int) -> bool:
+        """The crash-replay guard's probe: does ``rs``'s final file exist?"""
+        base = file_name(rs, self._range_end(rs), self.opts.pad)
+        part0 = base[: -len(".parquet")] + "-part0000.parquet"
+        return any(self._fs.exists(url_join(table_dir, n))
+                   for n in (base, part0))
+
     def _finalize_ready(self, table_dir: str, force: bool = False) -> None:
         """Finalize every fully-past range (``force``: every live range —
-        terminal drain only, Close parity). A range whose only source is a
-        file the append wrote (a marked epoch) is renamed into place by
-        ``_finalize``, metadata only. The rest (several epochs, compacted
-        ``epoch=-1`` or demoted ``epoch=-2`` rows, an unmarked epoch) are
-        merged through ``write_ranges`` in one Spark job. Crash repair ran
-        before this sink's first batch and after any raise (_recovering)."""
+        terminal drain only, Close parity). After a batch, every ready range
+        has one complete file in a marked epoch — this batch's for the
+        ranges it absorbed (:meth:`_append_live`) — and ``_finalize``
+        renames it into place, metadata only; the index the append listed
+        comes with it, so only this epoch's dir is listed here. Ranges with
+        several sources (``close``), compacted ``epoch=-1`` or demoted
+        ``epoch=-2`` rows, or an unmarked dir are merged through
+        ``write_ranges``. Crash repair ran before this sink's first batch
+        and after any raise (_recovering)."""
         live = url_join(table_dir, "_live")
-        marked: set[str] = set()
-        idx = live_index(self._fs, live, marked)
+        handoff = None if force else self._handoff.pop(table_dir, None)
+        if handoff is None:
+            own, absorbed, guard = None, set(), {}
+            marked: set[str] = set()
+            idx = live_index(self._fs, live, marked)
+        else:
+            own, idx, marked, absorbed, guard = handoff
+            idx.update(live_index(self._fs, live, marked, epochs=[own]))
         ranges = self._live_ranges(idx) if force else self._ready_ranges(idx)
-        if not ranges:
-            return
         # crash-replay guard (code review r11): a range whose FINAL file
         # already exists was completely finalized by a pre-crash pass —
         # one that may have merged EARLIER epochs' live rows the replayed
@@ -486,40 +556,35 @@ class StreamingSink:
         # writes a marker before touching the range, and recovery's marker
         # repair deletes the stale finalized file (re-demoting first when
         # the crash predates the demotion) before this probe can run.
-        def finalized(rs: int) -> bool:
-            base = file_name(rs, self._range_end(rs), self.opts.pad)
-            part0 = base[: -len(".parquet")] + "-part0000.parquet"
-            return any(self._fs.exists(url_join(table_dir, n))
-                       for n in (base, part0))
-
-        fresh = [rs for rs in ranges if not finalized(rs)]
+        fresh = [rs for rs in ranges if not (
+            guard[rs] if rs in guard else self._finalized(table_dir, rs))]
         srcs = {rs: self._range_dirs(idx, live, rs) for rs in ranges}
-        renames = {rs: srcs[rs][0] for rs in fresh if len(srcs[rs]) == 1
-                   and srcs[rs][0].split("/")[-2] in marked}
-        merges = [rs for rs in fresh if rs not in renames]
+        renames, merges = {}, []
+        for rs in fresh:
+            # an absorbed range's file in this epoch holds its older
+            # sources' rows too: those are only deleted
+            ds = [d for d in srcs[rs]
+                  if rs not in absorbed or d.split("/")[-2] == own]
+            if len(ds) == 1 and ds[0].split("/")[-2] in marked:
+                renames[rs] = ds[0]
+            else:
+                merges.append(rs)
         template = None
         if renames:
             template = url_join(table_dir, _finalize(
                 self.spark, self._fs, renames, table_dir, self.opts)[0])
         if merges:
-            # mergeSchema: epochs may span an additive schema upgrade
-            # (allowed by ensure_schema_compatible) — without it Spark reads
-            # ONE file's footer and would silently drop the added column
-            # from the finalized file before the sources are deleted
-            template = (
-                self.spark.read.option("basePath", live)
-                .option("mergeSchema", "true")
-                .parquet(*[d for rs in merges for d in srcs[rs]])
-                .drop("epoch", "range_start")
-            )
+            template = _read_range_dirs(
+                self.spark, [d for rs in merges for d in srcs[rs]])
             write_ranges(template, table_dir, self.opts, backfill=False,
                          ranges=merges)
         for d in (d for ds in srcs.values() for d in ds):
             self._fs.delete(d, recursive=True)
-        # Drop epochs emptied by finalize or the guard — decided from the
-        # index, no re-listing. Such an epoch holds only markers (_SUCCESS,
-        # _RANGE_FILES), which previously kept it "non-empty" and
-        # accumulated one stray dir per micro-batch forever.
+        # Drop epochs emptied by finalize or the guard, and those that never
+        # held a range (a batch of nil payloads) — decided from the index,
+        # no re-listing, and also when nothing was ready. Such an epoch
+        # holds only markers (_SUCCESS, _RANGE_FILES), which previously kept
+        # it "non-empty" and accumulated one stray dir per micro-batch.
         rset = set(ranges)
         for e, rss in idx.items():
             if set(rss) <= rset:
@@ -613,7 +678,7 @@ class StreamingSink:
         live = url_join(self.out_dir, "_live")
         if self._fs.exists(live) and self._fs.listdir(live):
             pieces.append(
-                self.spark.read.parquet(live).where(
+                _read_range_dirs(self.spark, [live]).where(
                     (F.col("block_number") >= fork_bucket)
                     & (F.col("block_number") <= last_valid_block)
                 )
@@ -661,16 +726,11 @@ class StreamingSink:
                 # the fork" and silently retain above-fork rows. One tiny
                 # footer-stat agg per live dir — undo is a rare, stopped-
                 # stream operation.
-                hi = (
-                    self.spark.read.parquet(src)
-                    .agg(F.max("block_number"))
-                    .collect()[0][0]
-                )
+                rows = _read_range_dirs(self.spark, [src])
+                hi = rows.agg(F.max("block_number")).collect()[0][0]
                 if hi is None or hi <= last_valid_block:
                     continue
-                kept = self.spark.read.parquet(src).filter(
-                    F.col("block_number") <= last_valid_block
-                )
+                kept = rows.filter(F.col("block_number") <= last_valid_block)
                 if not kept.take(1):
                     # an all-rolled-back dir must disappear, not become a
                     # zero-row staging dir finalize would trip over
@@ -684,8 +744,8 @@ class StreamingSink:
                 # _repair_live_rewrites converges it at the next recovery
                 parent, base = src.rsplit("/", 1)
                 tmp = url_join(parent, "_rewrite_" + base)
-                # one block-sorted file, like the append wrote: the epoch's
-                # range-files marker must stay true for this dir
+                # one block-sorted file (a write_tasks range's __sub=K files
+                # become one): the epoch's range-files marker must stay true
                 writer = (
                     kept.coalesce(1).sortWithinPartitions("block_number")
                     .write.mode("overwrite")

@@ -160,3 +160,54 @@ def test_decode_well_known_timestamp(spark):
     )
     assert got == expect
     assert row.name == "e1"
+
+
+def test_zip_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """The worker-side gate on ``zipimporter.invalidate_caches``: no
+    directory re-read while the archive is unchanged, one after it is
+    rewritten — and the importer then sees the new contents. No Spark."""
+    import os
+    import sys
+    import zipfile
+    import zipimport
+
+    import pytest
+
+    from substreams_sink_parquet_spark.decode import _gate_zip_invalidation
+
+    if sys.version_info >= (3, 13):
+        pytest.skip("invalidate_caches re-reads lazily from Python 3.13")
+    archive = str(tmp_path / "pkg.zip")
+
+    def build(modules):
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zpkg/__init__.py", "")
+            for name in modules:
+                z.writestr(f"zpkg/{name}.py", f"NAME = {name!r}\n")
+
+    build(["a"])
+    importer = zipimport.zipimporter(archive + "/zpkg/")
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    _gate_zip_invalidation()
+    _gate_zip_invalidation()  # idempotent: gates once, not twice
+    importer.invalidate_caches()  # first sight of this importer: reads
+    reads.clear()
+    for _ in range(3):
+        importer.invalidate_caches()
+    assert reads == []
+    build(["a", "bb"])
+    st = os.stat(archive)
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == [archive]
+    assert importer.find_spec("bb") is not None

@@ -1283,3 +1283,123 @@ def test_repairs_probe_only_at_start_and_after_a_raise(spark, tmp_path,
     )
     assert blocks == list(range(50))
     assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
+
+
+def test_batch_completing_earlier_range_writes_it_once(spark, tmp_path,
+                                                       monkeypatch):
+    """A range begun in one batch and completed by the next is absorbed:
+    the second batch's one live append per table reads the earlier rows in,
+    and finalize renames the result — no _staging merge. The final file
+    holds every block once, block-sorted, main and child in lockstep."""
+    from pyspark.sql import DataFrameWriter
+
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                         opts=WriterOptions(partition_size=10, start_block=0),
+                         explode=True, exploded_write_workers=1)
+    sink.process_batch(_blocks_df(spark, list(range(15))), epoch_id=0)
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def counting(self, path, *args, **kwargs):
+        writes.append(path)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    sink.process_batch(_blocks_df(spark, list(range(24, 14, -1))), epoch_id=1)
+    tables = [out_dir] + [os.path.join(out_dir, c)
+                          for c in ("nums", "tags", "transfers")]
+    assert sorted(writes) == sorted(
+        os.path.join(t, "_live", "epoch=1") for t in tables), writes
+    for t in tables:
+        assert not os.path.exists(os.path.join(t, "_staging"))
+        assert not os.path.exists(os.path.join(t, "_live", "epoch=0"))
+        got = pq.read_table(os.path.join(t, "0000000010-0000000020.parquet"))
+        want = list(range(10, 20)) if t == out_dir else sorted(
+            list(range(10, 20)) * 2)
+        assert got.column("block_number").to_pylist() == want, t
+
+
+def test_absorbing_batch_crash_on_rename_then_replay_converges(
+        spark, tmp_path, monkeypatch):
+    """A crash on the first rename after a batch absorbed an earlier
+    range: the older source survives until after the rename, so a fresh
+    sink replaying the epoch either absorbs it again (the rename never
+    happened) or finds the range finalized and drops it. Every block lands
+    exactly once and nothing is left live."""
+    import pytest
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+    from substreams_sink_parquet_spark.sink.writer import lake_coverage
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    opts = WriterOptions(partition_size=10, start_block=0)
+    first, second = _blocks_df(spark, list(range(15))), _blocks_df(
+        spark, list(range(15, 30)))
+    for moved in (0, 1):
+        out_dir = str(tmp_path / f"out{moved}")
+        os.makedirs(out_dir)
+        StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                      opts=opts).process_batch(first, epoch_id=0)
+
+        def crash(self, moves, moved=moved):
+            for m in list(moves)[:moved]:
+                self.rename(*m)
+            raise IOError("crash in rename_all")
+
+        with monkeypatch.context() as m:
+            m.setattr(HadoopFS, "rename_all", crash)
+            with pytest.raises(IOError, match="rename_all"):
+                StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                              opts=opts).process_batch(second, epoch_id=1)
+        assert len(_final_files(out_dir)) == 1 + moved
+
+        StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                      opts=opts).process_batch(second, epoch_id=1)
+        blocks = sorted(
+            b
+            for f in _final_files(out_dir)
+            for b in pq.read_table(
+                os.path.join(out_dir, f)
+            ).column("block_number").to_pylist()
+        )
+        assert blocks == list(range(30)), moved
+        assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
+        live = os.path.join(out_dir, "_live")
+        assert not os.path.exists(live) or not os.listdir(live), moved
+
+
+def test_close_sweeps_an_epoch_that_never_held_a_range(spark, tmp_path):
+    """A batch of nil payloads decodes to no rows, so its live epoch dir
+    holds only markers. The emptied-epoch sweep runs even when no range is
+    ready, so that dir is gone by the end of the batch and after close."""
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    sink = StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                         opts=WriterOptions(partition_size=10, start_block=0))
+    sink.process_batch(_blocks_df(spark, list(range(10))), epoch_id=0)
+    nil = spark.createDataFrame(
+        [(b, f"0x{b:x}", None) for b in (10, 11, 12)],
+        "block_number bigint, block_id string, payload binary")
+    sink.process_batch(nil, epoch_id=1)
+    sink.close()
+    live = os.path.join(out_dir, "_live")
+    assert not os.path.exists(live) or not os.listdir(live), os.listdir(live)
+    assert _final_files(out_dir) == ["0000000000-0000000010.parquet"]

@@ -70,12 +70,12 @@ HOLDBACK = 2
 # (kind, args): batches carry (epoch id, blocks, payload version)
 STEPS = [
     ("batch", (0, range(0, 6), 0)),    # finalizes [0,4) by rename
-    ("batch", (1, range(6, 11), 0)),   # [4,8) merges epochs 0 and 1
-    ("batch", (2, range(11, 15), 0)),  # [8,12) merges epochs 1 and 2
+    ("batch", (1, range(6, 11), 0)),   # [4,8): epoch 1 absorbs epoch 0's rows
+    ("batch", (2, range(11, 15), 0)),  # [8,12): epoch 2 absorbs epoch 1's
     ("undo", 5),                       # inside finalized [4,8): demote 4, 5
-    ("batch", (3, range(6, 14), 1)),   # re-feed: [4,8) merges epoch=-2
+    ("batch", (3, range(6, 14), 1)),   # re-feed: [4,8) absorbs epoch=-2
     ("undo", 12),                      # inside live [12,16): rewrite
-    ("batch", (4, range(13, 18), 2)),  # re-feed: [12,16) merges
+    ("batch", (4, range(13, 18), 2)),  # re-feed: [12,16) absorbs epoch 3's
     ("close", None),                   # [16,20) renamed
 ]
 
