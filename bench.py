@@ -343,7 +343,7 @@ def bench_catchup_write(spark) -> dict:
     400k pre-decoded rows across 4 LARGE ranges, where parquet encode (not
     protobuf decode) dominates. Default one-task-per-range caps encode at 4
     cores of 32; write_tasks=cpus sub-splits each range into block-ordered
-    -partNNNN files (sink/writer.py:_stage_partitioning). Two timed samples
+    -partNNNN files (sink/writer.py:stage_ranges). Two timed samples
     per mode after one warm-up; all samples reported."""
     import shutil
     import tempfile

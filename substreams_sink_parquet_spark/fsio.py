@@ -27,9 +27,11 @@ from concurrent.futures import ThreadPoolExecutor
 import re
 from typing import Iterable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 _MAX_FS_THREADS = 16
+_NOT_FOUND = "java.io.FileNotFoundException"
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
@@ -61,6 +63,7 @@ class HadoopFS:
 
     def __init__(self, spark: SparkSession, url: str):
         self._jvm = spark.sparkContext._jvm
+        self._gateway = spark.sparkContext._gateway
         self._conf = spark.sparkContext._jsc.hadoopConfiguration()
         self._path_cls = self._jvm.org.apache.hadoop.fs.Path
         self.root = normalize_store_url(url)
@@ -76,16 +79,26 @@ class HadoopFS:
     def exists(self, url: str) -> bool:
         return self.fs.exists(self.jpath(url))
 
+    def _absent_as(self, call, default):
+        """``call()``, or ``default`` when it raised Java's
+        FileNotFoundException: one store call where an ``exists`` probe
+        first would make two."""
+        try:
+            return call()
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() == _NOT_FOUND:
+                return default
+            raise
+
     def is_dir(self, url: str) -> bool:
         p = self.jpath(url)
-        return self.fs.exists(p) and self.fs.getFileStatus(p).isDirectory()
+        return self._absent_as(lambda: self.fs.getFileStatus(p).isDirectory(), False)
 
     def listdir(self, url: str) -> list[str]:
         """Child names (files and dirs) of a directory URL; [] if absent."""
         p = self.jpath(url)
-        if not self.fs.exists(p):
-            return []
-        return sorted(st.getPath().getName() for st in self.fs.listStatus(p))
+        return sorted(st.getPath().getName()
+                      for st in self._absent_as(lambda: self.fs.listStatus(p), []))
 
     def file_stamp(self, url: str) -> tuple[int, int] | None:
         """(byte length, modification time ms) of one file — ONE
@@ -104,16 +117,35 @@ class HadoopFS:
             return None
         return int(st.getLen()), int(st.getModificationTime())
 
-    def list_sizes(self, url: str) -> dict[str, int]:
-        """{child name: byte size} for plain files under a directory URL."""
+    def list_sizes(self, url: str, recursive: bool = False) -> dict[str, int]:
+        """{child name: byte size} for plain files under a directory URL; {}
+        if absent. ``recursive``: every file in the tree, keyed by its path
+        relative to ``url``, from one ``listStatus`` call per tree level
+        over all of that level's dirs — not one per dir. (``listFiles``
+        would build a LocatedFileStatus per file, which on the local FS
+        forks a process per file to read its permissions.)"""
         p = self.jpath(url)
-        if not self.fs.exists(p):
-            return {}
-        return {
-            st.getPath().getName(): st.getLen()
-            for st in self.fs.listStatus(p)
-            if not st.isDirectory()
-        }
+        level = self._absent_as(lambda: self.fs.listStatus(p), [])
+        if not recursive:
+            return {st.getPath().getName(): st.getLen()
+                    for st in level if not st.isDirectory()}
+        root = p.toUri().getPath().rstrip("/") + "/"
+        out: dict[str, int] = {}
+        while level:
+            dirs = []
+            for st in level:
+                if st.isDirectory():
+                    dirs.append(st.getPath())
+                else:
+                    out[st.getPath().toUri().getPath()[len(root):]] = st.getLen()
+            level = self.fs.listStatus(self._paths(dirs)) if dirs else []
+        return out
+
+    def _paths(self, paths: list):
+        arr = self._gateway.new_array(self._path_cls, len(paths))
+        for i, q in enumerate(paths):
+            arr[i] = q
+        return arr
 
     def content_fingerprint(self, url: str) -> str:
         """md5 over the metadata of a file, directory, or GLOB url — an
@@ -169,9 +201,10 @@ class HadoopFS:
     def rename(self, src: str, dst: str, overwrite: bool = True) -> None:
         """Atomic-per-store rename (the .partial→final move, writer.go:80-85).
         Hadoop rename refuses an existing destination, so overwrite deletes
-        first — matching shutil.move's previous local semantics."""
+        first — matching shutil.move's previous local semantics. Deleting an
+        absent path is a no-op, so no ``exists`` probe precedes it."""
         s, d = self.jpath(src), self.jpath(dst)
-        if overwrite and self.fs.exists(d):
+        if overwrite:
             self.fs.delete(d, False)
         try:
             ok = self.fs.rename(s, d)
@@ -227,19 +260,17 @@ class HadoopFS:
 RANGE_FILES_MARKER = "_RANGE_FILES"
 
 
-def live_index(fs: "HadoopFS", live: str, marked: set[str] | None = None,
-               epochs: list[str] | None = None) -> dict[str, list[int]]:
+def live_index(fs: "HadoopFS", live: str,
+               marked: set[str] | None = None) -> dict[str, list[int]]:
     """ONE listing sweep over a ``_live`` staging area: {epoch dir name:
     sorted range starts}. Shared by the streaming sink's per-batch pass and
     offline compaction so a micro-batch (or maintenance run) costs
     O(epochs + ranges) FS calls, not O(epochs x ranges) — with a long
     holdback and a fast trigger that difference is thousands of
-    driver-to-store round-trips per batch."""
-    # ``marked``, if given, collects the epochs whose dir holds
-    # RANGE_FILES_MARKER — from the same listing. ``epochs``, if given,
-    # lists only those epoch dirs instead of the whole area.
+    driver-to-store round-trips per batch. ``marked``, if given, collects
+    the epochs whose dir holds RANGE_FILES_MARKER — from the same listing."""
     idx: dict[str, list[int]] = {}
-    for e in fs.listdir(live) if epochs is None else epochs:
+    for e in fs.listdir(live):
         if not e.startswith("epoch="):
             continue
         names = fs.listdir(url_join(live, e))

@@ -11,12 +11,14 @@ to the reference's zero-padded ``{start:010d}-{end:010d}.parquet`` layout and
 backfills empty ranges for gaps (writer.go:220-267) so the lake is contiguous
 from the configured anchor.
 
-The streaming sink shares this one range writer: its live append is this
-staging write (one block-sorted file per range per epoch, or per ``__sub=K``
-block sub-range under ``write_tasks``) and its finalize renames those files
-with :func:`_finalize`. The batch that makes a range ready writes it whole,
-earlier epochs' live rows included, so a finalize on a batch never rewrites
-rows; a row that arrives in the range's last batch is written once.
+The streaming sink shares this one range writer: its live append is the
+same staging write (:func:`stage_ranges`: one block-sorted file per range
+per epoch, or per ``__sub=K`` block sub-range under ``write_tasks``), one
+recursive listing of a staged dir finds every range's files
+(:func:`staged_ranges`), and :func:`_finalize` renames them. The batch that
+makes a range ready writes it whole, earlier epochs' live rows included, so
+a finalize on a batch never rewrites rows; a row that arrives in the range's
+last batch is written once.
 
 Store abstraction: all metadata operations (rename, list, backfill touch) go
 through :mod:`..fsio` — the Hadoop FileSystem API — so the lake root may be
@@ -31,8 +33,9 @@ maps to the Parquet options the reference sets via parquet-go properties
 (writer.go:93-118, run.go:44-49).
 
 Scale note: the shuffle key is the range start — cardinality grows with data
-volume; the finalize pass touches only file metadata (one rename per range,
-16-way parallel), so it stays O(files), not O(rows). All data movement is
+volume; the finalize pass touches only file metadata (one recursive listing
+of the staged dir, then one rename per file, 16-way parallel), so it stays
+O(files), not O(rows). All data movement is
 executor-side. ``target_file_bytes`` re-splits oversize ranges in one extra
 job covering only those ranges (soft rotation, run.go:48).
 """
@@ -168,37 +171,14 @@ def write_ranges(
     discrepancy aborts loudly before any finalize rename."""
     spark = df.sparkSession
     fs = HadoopFS(spark, out_dir)
-    ranged = df.withColumn(
-        "__range_start", range_start_col(block_col, opts.start_block, opts.partition_size)
-    )
-
-    distinct_ranges = (
-        list(ranges)
-        if ranges is not None
-        else [r[0] for r in ranged.select("__range_start").distinct().collect()]
-    )
-    n_ranges = max(len(distinct_ranges), 1)
+    if ranges is None:
+        rs_col = range_start_col(block_col, opts.start_block, opts.partition_size)
+        ranges = [r[0] for r in df.select(rs_col).distinct().collect()]
 
     staging = url_join(out_dir, "_staging")
-    staged_df, part_cols = _stage_partitioning(ranged, n_ranges, opts, block_col)
-    writer = (
-        # sort by (partition cols, block): satisfies the dynamic-partition
-        # write's required ordering, so Spark keeps this order instead of
-        # re-sorting by partition column alone (which would shuffle block order)
-        staged_df.sortWithinPartitions(*part_cols, block_col)
-        .write.mode("overwrite")
-    )
-    for k, v in parquet_write_options(opts).items():
-        writer = writer.option(k, v)
-    writer.partitionBy(*part_cols).parquet(staging)
-
-    prefix = "__range_start="
-    staged = {
-        int(d[len(prefix):]): url_join(staging, d)
-        for d in fs.listdir(staging)
-        if d.startswith(prefix)
-    }
-    supplied = set(distinct_ranges)
+    stage_ranges(df, staging, opts, len(ranges), block_col)
+    staged = staged_ranges(fs.list_sizes(staging, recursive=True), staging)
+    supplied = set(ranges)
     absent, extra = supplied - set(staged), set(staged) - supplied
     if absent or extra:
         raise ValueError(
@@ -210,17 +190,17 @@ def write_ranges(
     written = _finalize(spark, fs, staged, out_dir, opts, block_col)
     fs.delete(staging, recursive=True)
 
-    if backfill and distinct_ranges:
-        max_block_seen = max(distinct_ranges)
-        written += backfill_empty(
-            spark, df.drop("__range_start"), out_dir, opts, upto=max_block_seen
-        )
+    if backfill and ranges:
+        written += backfill_empty(spark, df, out_dir, opts, upto=max(ranges))
     return sorted(set(written))
 
 
-def _stage_partitioning(ranged: DataFrame, n_ranges: int, opts: WriterOptions,
-                        block_col: str) -> tuple[DataFrame, list[str]]:
-    """Partitioning for the staging write; returns (frame, partition cols).
+def stage_ranges(df: DataFrame, root: str, opts: WriterOptions, n_ranges: int,
+                 block_col: str = "block_number",
+                 key: str = "__range_start") -> None:
+    """The one staging write, shared by ``write_ranges`` and the stream's
+    live append: ``df`` under ``root/{key}=R/`` as block-sorted parquet,
+    overwriting ``root``. ``n_ranges``: how many ranges ``df`` holds.
 
     Default: hash on the range — exactly one task (one file) per range.
     With ``write_tasks`` exceeding the range count, each range splits into
@@ -235,124 +215,158 @@ def _stage_partitioning(ranged: DataFrame, n_ranges: int, opts: WriterOptions,
     running the mapInPandas protobuf decode (the most expensive stage)
     twice per batch; measured 13.1k vs 22.0k blocks/s on the 20k-block
     bench. The computed column is one projection, same single shuffle."""
+    n_ranges = max(n_ranges, 1)
     n_tasks = max(n_ranges, opts.write_tasks or 0)
+    staged = df.withColumn(
+        key, range_start_col(block_col, opts.start_block, opts.partition_size)
+    )
+    part_cols = [key]
     if n_tasks <= n_ranges:
-        return ranged.repartition(n_ranges, "__range_start"), ["__range_start"]
-    k = -(-n_tasks // n_ranges)
-    sub_size = max(1, -(-opts.partition_size // k))
-    with_sub = ranged.withColumn(
-        "__sub",
-        F.floor((F.col(block_col) - F.col("__range_start")) / sub_size).cast("int"),
-    )
-    return (
-        with_sub.repartition(n_ranges * k, "__range_start", "__sub"),
-        ["__range_start", "__sub"],
-    )
+        staged = staged.repartition(n_ranges, key)
+    else:
+        k = -(-n_tasks // n_ranges)
+        sub_size = max(1, -(-opts.partition_size // k))
+        staged = staged.withColumn(
+            "__sub", F.floor((F.col(block_col) - F.col(key)) / sub_size).cast("int"),
+        ).repartition(n_ranges * k, key, "__sub")
+        part_cols.append("__sub")
+    # sort by (partition cols, block): satisfies the dynamic-partition
+    # write's required ordering, so Spark keeps this order instead of
+    # re-sorting by partition column alone (which would shuffle block order)
+    staged.sortWithinPartitions(*part_cols, block_col).write.mode(
+        "overwrite").options(**parquet_write_options(opts)).partitionBy(
+        *part_cols).parquet(root)
 
 
-def _staged_part_files(fs: HadoopFS, part_dir: str) -> dict[str, int]:
-    return {
-        n: sz
-        for n, sz in fs.list_sizes(part_dir).items()
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    }
-
-
-def _ordered_range_parts(fs: HadoopFS, part_dir: str) -> list[tuple[str, int]]:
-    """A staged range's parquet files as (relative path, size), in BLOCK
-    order. Flat layout (default): the single hash-partitioned file. Sub
-    layout (``write_tasks``): one file per ``__sub=K`` dir, ordered by the
-    sub number — which is the block sub-range index by construction."""
-    subs = sorted(
-        (int(e[len("__sub="):]), e)
-        for e in fs.listdir(part_dir)
-        if e.startswith("__sub=")
-    )
-    flat = _staged_part_files(fs, part_dir)
-    if not subs:
-        return sorted(flat.items())
-    if flat:
+def _range_parts(listing: dict[str, int], where: str,
+                 single: bool = True) -> list[tuple[str, int]]:
+    """One staged range dir's parquet files as (path relative to it, size),
+    in BLOCK order, from its recursive listing. Flat layout (default): the
+    single hash-partitioned file — or, with ``single=False`` (the
+    soft-rotation re-split), several files in name order, which is task
+    order, which is block order. Sub layout (``write_tasks``): one file per
+    ``__sub=K`` dir, ordered by the sub number — the block sub-range index
+    by construction."""
+    flat, subs = [], {}
+    for rel, size in listing.items():
+        *dirs, name = rel.split("/")
+        if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            continue
+        if not dirs:
+            flat.append((rel, size))
+        elif len(dirs) == 1 and dirs[0].startswith("__sub="):
+            subs.setdefault(int(dirs[0][len("__sub="):]), []).append((rel, size))
+    if subs and flat:
         # a partial retry under a changed write_tasks setting can leave BOTH
         # __sub= dirs and flat part files; silently ignoring the flat files
         # would drop their rows from finalize — raise like every other
         # layout violation
         raise RuntimeError(
-            f"{part_dir}: mixed staged layout — both __sub= dirs "
+            f"{where}: mixed staged layout — both __sub= dirs "
             f"({len(subs)}) and flat part files ({sorted(flat)}); "
             "the staging dir is corrupt (e.g. a retry under a changed "
             "write_tasks setting) — clear it and rerun"
         )
-    out: list[tuple[str, int]] = []
-    for _k, e in subs:
-        sub_files = _staged_part_files(fs, url_join(part_dir, e))
-        if len(sub_files) != 1:
+    for k, files in sorted(subs.items()):
+        if len(files) != 1:
             raise RuntimeError(
-                f"{part_dir}/{e}: expected exactly 1 part file, got "
-                f"{len(sub_files)} ((range, sub) repartition invariant violated)"
+                f"{where}/__sub={k}: expected exactly 1 part file, got "
+                f"{len(files)} ((range, sub) repartition invariant violated)"
             )
-        (n, sz), = sub_files.items()
-        out.append((f"{e}/{n}", sz))
+    if subs:
+        return [files[0] for _k, files in sorted(subs.items())]
+    # a flat range dir promises one task per range; several files there
+    # would finalize in task order, not block order — raise regardless of
+    # configuration (e.g. maxRecordsPerFile set in the session would split
+    # a task's output)
+    if single and len(flat) != 1:
+        raise RuntimeError(
+            f"{where}: expected exactly 1 part file, got {len(flat)} "
+            "(range-hash repartition invariant violated)"
+        )
+    return sorted(flat)
+
+
+def staged_ranges(listing: dict[str, int], root: str,
+                  key: str = "__range_start",
+                  single: bool = True) -> dict[int, list[tuple[str, int]]]:
+    """{range start: [(file URL, size), ...] in block order} for every
+    ``{key}=R`` dir under a staged root, from ONE recursive listing of it
+    (``HadoopFS.list_sizes(root, recursive=True)``); files outside range
+    dirs (``_SUCCESS``, markers) are skipped. Every range dir is checked by
+    :func:`_range_parts`."""
+    prefix = key + "="
+    by_range: dict[int, dict[str, int]] = {}
+    for rel, size in listing.items():
+        top, sep, rest = rel.partition("/")
+        if sep and top.startswith(prefix):
+            by_range.setdefault(int(top[len(prefix):]), {})[rest] = size
+    out = {}
+    for rs, files in sorted(by_range.items()):
+        where = url_join(root, f"{prefix}{rs}")
+        out[rs] = [(url_join(where, p), sz)
+                   for p, sz in _range_parts(files, where, single)]
     return out
 
 
-def _finalize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
-              out_dir: str, opts: WriterOptions,
-              block_col: str = "block_number") -> list[str]:
+def _rename_ranges(fs: HadoopFS, srcs: dict[int, list[str]], out_dir: str,
+                   opts: WriterOptions) -> list[str]:
+    """Rename each range's block-ordered files to its final names — the
+    plain padded name for one file, ordered ``-partNNNN`` siblings for
+    several — and return the names. Every range's later parts move first
+    and its first file last, so the file the replay guard probes for (the
+    plain name or ``-part0000``) appears only once the whole range is in
+    place: a crash between the two waves leaves a range the guard reads as
+    not finalized, and its replay rewrites it."""
+    moves = []
+    for rs, files in sorted(srcs.items()):
+        name = file_name(rs, _range_end(rs, opts), opts.pad)
+        names = [name] if len(files) == 1 else [
+            f"{name[:-len('.parquet')]}-part{i:04d}.parquet"
+            for i in range(len(files))]
+        moves.append([(f, url_join(out_dir, n)) for f, n in zip(files, names)])
+    for wave in ([m for ms in moves for m in ms[1:]], [ms[0] for ms in moves]):
+        if wave:
+            fs.rename_all(wave)
+    return [dst.rsplit("/", 1)[1] for ms in moves for _src, dst in ms]
+
+
+def _finalize(spark: SparkSession, fs: HadoopFS,
+              parts: dict[int, list[tuple[str, int]]], out_dir: str,
+              opts: WriterOptions, block_col: str = "block_number") -> list[str]:
     """Rename each range's staged file(s) to padded flat file names —
     metadata-only, mirroring the reference's .partial → final rename
     (writer.go:80-85, 176-213), fanned out over the FS thread pool.
-    ``sources`` maps a range start to the dir holding its file(s): a
-    ``write_ranges`` staging dir, or a live range dir the stream's append
-    wrote. The caller deletes the sources afterwards.
+    ``parts`` maps a range start to its files and sizes in block order, as
+    :func:`staged_ranges` reads them from one listing of a ``write_ranges``
+    staging root or a live epoch dir — so finalize itself lists nothing.
+    The caller deletes the sources afterwards.
 
-    Ranges whose single staged file exceeds ``target_file_bytes`` take the
+    Ranges with a staged file over ``target_file_bytes`` take the
     soft-rotation path: ONE extra Spark job re-splits all oversize ranges
     into approximately target-sized, block-ordered ``-partNNNN`` files."""
-    moves: list[tuple[str, str]] = []
+    renames: dict[int, list[str]] = {}
     oversize: dict[int, int] = {}
-    written = []
-    for rs in sorted(sources):
-        part_dir = sources[rs]
-        parts = _ordered_range_parts(fs, part_dir)
-        if not parts:
+    for rs, files in parts.items():
+        if not files:
             raise RuntimeError(f"range {rs}: staged directory holds no part files")
-        # keyed off the ACTUAL staged layout, not opts.write_tasks: a flat
-        # range dir (no __sub= level) promises one-task-per-range, and a
-        # multi-file flat dir would finalize in task order, not block order
-        # — raise regardless of configuration (e.g. maxRecordsPerFile set
-        # in the session would split a task's output)
-        if len(parts) != 1 and "/" not in parts[0][0]:
-            raise RuntimeError(
-                f"range {rs}: expected exactly 1 part file, got {len(parts)} "
-                "(range-hash repartition invariant violated)"
-            )
         if opts.target_file_bytes is not None and any(
-            sz > opts.target_file_bytes for _n, sz in parts
+            sz > opts.target_file_bytes for _f, sz in files
         ):
             # re-split the WHOLE range (not just the oversize sibling) so
             # the -partNNNN indices stay contiguous and block-ordered
-            oversize[rs] = sum(sz for _n, sz in parts)
-            continue
-        re_ = _range_end(rs, opts)
-        if len(parts) == 1:
-            name = file_name(rs, re_, opts.pad)
-            moves.append((url_join(part_dir, parts[0][0]), url_join(out_dir, name)))
-            written.append(name)
+            oversize[rs] = sum(sz for _f, sz in files)
         else:
-            base = file_name(rs, re_, opts.pad)[: -len(".parquet")]
-            for i, (p, _sz) in enumerate(parts):
-                name = base + f"-part{i:04d}.parquet"
-                moves.append((url_join(part_dir, p), url_join(out_dir, name)))
-                written.append(name)
-    fs.rename_all(moves)
-
+            renames[rs] = [f for f, _sz in files]
+    written = _rename_ranges(fs, renames, out_dir, opts)
     if oversize:
-        written += _split_oversize(spark, fs, sources, out_dir, oversize, opts, block_col)
+        written += _split_oversize(spark, fs, parts, out_dir, oversize, opts,
+                                   block_col)
     return written
 
 
 def _read_range_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    """The rows of staged or live range dirs, as data columns only.
+    """The rows of staged or live range dirs or files, as data columns only.
     recursiveFileLookup reads the files themselves: a ``write_tasks`` range
     dir nests its files under ``__sub=K``, Spark refuses to infer partitions
     over a mix of nested and flat dirs, and no ``__sub``, ``epoch`` or
@@ -366,8 +380,9 @@ def _read_range_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
     )
 
 
-def _split_oversize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
-                    out_dir: str, oversize: dict[int, int], opts: WriterOptions,
+def _split_oversize(spark: SparkSession, fs: HadoopFS,
+                    parts: dict[int, list[tuple[str, int]]], out_dir: str,
+                    oversize: dict[int, int], opts: WriterOptions,
                     block_col: str) -> list[str]:
     """Soft rotation (reference run.go:48 --target-file-bytes): re-split every
     oversize range in ONE job. repartitionByRange on (range, block) makes
@@ -378,38 +393,20 @@ def _split_oversize(spark: SparkSession, fs: HadoopFS, sources: dict[int, str],
     )
     resplit_dir = url_join(out_dir, "_staging_resplit")
     df = _read_range_dirs(
-        spark, [sources[rs] for rs in oversize]
+        spark, [f for rs in oversize for f, _sz in parts[rs]]
     ).withColumn("__range_start",
                  range_start_col(block_col, opts.start_block, opts.partition_size))
-    writer = (
+    (
         df.repartitionByRange(total_parts, "__range_start", block_col)
         .sortWithinPartitions("__range_start", block_col)
-        .write.mode("overwrite")
+        .write.mode("overwrite").options(**parquet_write_options(opts))
+        .partitionBy("__range_start").parquet(resplit_dir)
     )
-    for k, v in parquet_write_options(opts).items():
-        writer = writer.option(k, v)
-    writer.partitionBy("__range_start").parquet(resplit_dir)
 
-    moves: list[tuple[str, str]] = []
-    written = []
-    for rs in sorted(oversize):
-        part_dir = url_join(resplit_dir, f"__range_start={rs}")
-        # Spark part file names carry the writing task's id — ascending task
-        # id == ascending block (repartitionByRange), so name order is block
-        # order and the -partNNNN index preserves it.
-        parts = sorted(_staged_part_files(fs, part_dir))
-        re_ = _range_end(rs, opts)
-        if len(parts) == 1:
-            name = file_name(rs, re_, opts.pad)
-            moves.append((url_join(part_dir, parts[0]), url_join(out_dir, name)))
-            written.append(name)
-            continue
-        for i, p in enumerate(parts):
-            base = file_name(rs, re_, opts.pad)
-            name = base[: -len(".parquet")] + f"-part{i:04d}.parquet"
-            moves.append((url_join(part_dir, p), url_join(out_dir, name)))
-            written.append(name)
-    fs.rename_all(moves)
+    resplit = staged_ranges(fs.list_sizes(resplit_dir, recursive=True),
+                            resplit_dir, single=False)
+    written = _rename_ranges(fs, {rs: [f for f, _sz in files]
+                                  for rs, files in resplit.items()}, out_dir, opts)
     fs.delete(resplit_dir, recursive=True)
     return written
 
@@ -473,10 +470,8 @@ def backfill_empty(
         template_df = spark.read.parquet(template_df)
     tmpl_dir = url_join(out_dir, "_empty_template")
     empty = spark.createDataFrame([], template_df.schema)
-    writer = empty.coalesce(1).write.mode("overwrite")
-    for k, v in parquet_write_options(opts).items():
-        writer = writer.option(k, v)
-    writer.parquet(tmpl_dir)
+    empty.coalesce(1).write.mode("overwrite").options(
+        **parquet_write_options(opts)).parquet(tmpl_dir)
     part = next(
         n for n in fs.listdir(tmpl_dir)
         if n.endswith(".parquet") and not n.startswith(("_", "."))

@@ -22,12 +22,13 @@ Reference translation (SURVEY.md §3.1):
   every remaining live range after the query stops — without it, a
   ``--stop-block`` run's terminal clamped range could never satisfy the
   holdback inequality and would sit in ``_live/`` forever.
-- .partial → final rename (writer.go:80-85): the live area holds one
-  block-sorted file per range per epoch, and finalize renames it into place.
-  A batch that makes a range ready reads that range's earlier live rows into
-  its own append, so every range is written whole by one batch and a batch's
-  finalize only renames; ``write_ranges`` merges only at ``close`` (a range
-  with several live sources) and for unmarked or hand-staged dirs.
+- .partial → final rename (writer.go:80-85): the live append is
+  ``write_ranges``' own staging write (``stage_ranges``), one block-sorted
+  file per range per epoch. A batch that makes a range ready reads that
+  range's earlier live rows into its append, so every range is written whole
+  by one batch, and its finalize lists the epoch dir once and renames the
+  files that listing found; ``write_ranges`` merges only at ``close`` (a
+  range with several live sources) and for unmarked or hand-staged dirs.
 
 All file metadata operations go through :mod:`..fsio` (Hadoop FileSystem),
 so the lake root may be file://, s3a://, gs:// or abfs://.
@@ -51,14 +52,15 @@ from ..sink.maintenance import recover_compact_leftovers, recover_tier_leftovers
 from ..sink.writer import (
     WriterOptions,
     _finalize,
-    _range_end as _writer_range_end,
+    _range_end,
     _read_range_dirs,
     _split_range_name,
-    _stage_partitioning,
     backfill_empty,
     file_name,
     ensure_schema_compatible,
     parquet_write_options,
+    stage_ranges,
+    staged_ranges,
     write_ranges,
 )
 
@@ -69,10 +71,11 @@ class StreamingSink:
 
     Layout under ``out_dir``:
       - ``_live/epoch=E/range_start=N/`` rows of not-yet-final ranges
-        (re-writable on reorg): one block-sorted file per range per epoch
-        (one per ``__sub=K`` dir under ``write_tasks``). The epoch that
-        makes a range ready holds all of its rows, earlier epochs' included,
-        and finalize renames that file into place;
+        (re-writable on reorg), as ``stage_ranges`` writes them: one
+        block-sorted file per range per epoch (one per ``__sub=K`` dir under
+        ``write_tasks``). The epoch that makes a range ready holds all of
+        its rows, earlier epochs' included, and finalize renames its files
+        into place;
       - ``{rs:010d}-{re:010d}.parquet`` finalized immutable range files.
     """
 
@@ -301,10 +304,11 @@ class StreamingSink:
                 self._finalize_ready(table_dir)
 
     def _append_live(self, df: DataFrame, table_dir: str, epoch_id: int) -> None:
-        """Stage the epoch's rows as ``write_ranges`` stages them — one
-        block-sorted file per range (per ``__sub=K`` under ``write_tasks``)
-        under ``_live/epoch={id}/range_start=N/`` — and mark the epoch dir
-        so finalize may rename them into place.
+        """Stage the epoch's rows with ``write_ranges``' staging writer
+        (:func:`stage_ranges`) — one block-sorted file per range (per
+        ``__sub=K`` under ``write_tasks``) under
+        ``_live/epoch={id}/range_start=N/`` — and mark the epoch dir so
+        finalize may rename them into place.
 
         A range that is ready at the end of this batch and has rows in
         earlier live sources is ABSORBED: those rows are read into this
@@ -341,7 +345,7 @@ class StreamingSink:
 
         absorbed: dict[int, list[str]] = {}
         for rs, done in guard.items():
-            srcs = self._range_dirs(idx, live, rs)
+            srcs = live_range_dirs(idx, live, rs)
             if not done and (in_batch(rs) or len(srcs) > 1
                              or srcs[0].split("/")[-2] not in marked):
                 absorbed[rs] = srcs
@@ -354,30 +358,12 @@ class StreamingSink:
         n_ranges = sum(1 for rs in absorbed if not in_batch(rs))
         if span is not None:
             n_ranges += (span[1] - span[0]) // self.opts.partition_size + 1
-        ranged = df.withColumn(
-            "__range_start",
-            range_start_col("block_number", self.opts.start_block, self.opts.partition_size),
-        )
-        staged, part_cols = _stage_partitioning(
-            ranged, max(n_ranges, 1), self.opts, "block_number"
-        )
-        writer = (
-            staged.sortWithinPartitions(*part_cols, "block_number")
-            .withColumnRenamed("__range_start", "range_start")
-            .write.mode("overwrite")
-        )
-        for k, v in parquet_write_options(self.opts).items():
-            writer = writer.option(k, v)
         epoch_dir = url_join(live, own)
-        writer.partitionBy(*["range_start" if c == "__range_start" else c
-                             for c in part_cols]).parquet(epoch_dir)
+        stage_ranges(df, epoch_dir, self.opts, n_ranges, key="range_start")
         self._fs.write_bytes(url_join(epoch_dir, RANGE_FILES_MARKER), b"")
         self._handoff[table_dir] = (own, idx, marked, set(absorbed), guard)
 
     # -- finalize -----------------------------------------------------------
-
-    def _range_end(self, rs: int) -> int:
-        return _writer_range_end(rs, self.opts)
 
     def _live_index(self, live: str) -> dict[str, list[int]]:
         return live_index(self._fs, live)  # shared sweep (fsio.live_index)
@@ -386,10 +372,6 @@ class StreamingSink:
     def _live_ranges(idx: dict[str, list[int]]) -> list[int]:
         return sorted({rs for rss in idx.values() for rs in rss})
 
-    @staticmethod
-    def _range_dirs(idx: dict[str, list[int]], live: str, rs: int) -> list[str]:
-        return live_range_dirs(idx, live, rs)
-
     def _ready_ranges(self, idx: dict[str, list[int]]) -> list[int]:
         """Ranges safely behind the holdback horizon. The end is CLAMPED to
         --stop-block: a terminal partial range [rs, end_block) is ready once
@@ -397,7 +379,7 @@ class StreamingSink:
         return [
             rs
             for rs in self._live_ranges(idx)
-            if self._max_seen >= self._range_end(rs) + self.undo_holdback - 1
+            if self._max_seen >= _range_end(rs, self.opts) + self.undo_holdback - 1
         ]
 
     def _repair_stranded_finalize(self, table_dir: str) -> None:
@@ -417,28 +399,20 @@ class StreamingSink:
         sources, and the next finalize's overwrite of _staging would
         destroy the stranded parts — silent row loss."""
         prefix = "__range_start="
-        roots = [
+        roots = [(root, self._fs.listdir(root)) for root in (
             url_join(table_dir, "_staging"),
             url_join(table_dir, "_staging_resplit"),
-        ]
-        stranded: set[int] = set()
-        found = False
-        for root in roots:
-            if not self._fs.exists(root):
-                continue
-            found = True
-            for d in self._fs.listdir(root):
-                if d.startswith(prefix):
-                    stranded.add(int(d[len(prefix):]))
-        if not found:
-            return
+        )]
+        stranded = {int(d[len(prefix):]) for _root, names in roots
+                    for d in names if d.startswith(prefix)}
         if stranded:
             for name in self._fs.listdir(table_dir):
                 parsed = _split_range_name(name)
                 if parsed is not None and parsed[0] in stranded:
                     self._fs.delete(url_join(table_dir, name), recursive=False)
-        for root in roots:
-            self._fs.delete(root, recursive=True)
+        for root, names in roots:
+            if names:
+                self._fs.delete(root, recursive=True)
 
     def _undo_marker_dir(self, table_dir: str) -> str:
         return url_join(table_dir, "_undo_markers")
@@ -468,7 +442,6 @@ class StreamingSink:
         if not self._fs.exists(markers_dir):
             return
         import json
-
         import warnings
 
         for name in sorted(self._fs.listdir(markers_dir)):
@@ -518,7 +491,7 @@ class StreamingSink:
 
     def _finalized(self, table_dir: str, rs: int) -> bool:
         """The crash-replay guard's probe: does ``rs``'s final file exist?"""
-        base = file_name(rs, self._range_end(rs), self.opts.pad)
+        base = file_name(rs, _range_end(rs, self.opts), self.opts.pad)
         part0 = base[: -len(".parquet")] + "-part0000.parquet"
         return any(self._fs.exists(url_join(table_dir, n))
                    for n in (base, part0))
@@ -526,23 +499,27 @@ class StreamingSink:
     def _finalize_ready(self, table_dir: str, force: bool = False) -> None:
         """Finalize every fully-past range (``force``: every live range —
         terminal drain only, Close parity). After a batch, every ready range
-        has one complete file in a marked epoch — this batch's for the
+        has its complete files in a marked epoch — this batch's for the
         ranges it absorbed (:meth:`_append_live`) — and ``_finalize``
-        renames it into place, metadata only; the index the append listed
-        comes with it, so only this epoch's dir is listed here. Ranges with
-        several sources (``close``), compacted ``epoch=-1`` or demoted
-        ``epoch=-2`` rows, or an unmarked dir are merged through
+        renames them into place, metadata only. The index the append listed
+        comes with it; this epoch's dir is listed once, recursively, and
+        that one listing gives both its ranges and the files to rename. An
+        older epoch a range is renamed from as it stands is listed once.
+        Ranges with several sources (``close``), compacted ``epoch=-1`` or
+        demoted ``epoch=-2`` rows, or an unmarked dir are merged through
         ``write_ranges``. Crash repair ran before this sink's first batch
         and after any raise (_recovering)."""
         live = url_join(table_dir, "_live")
         handoff = None if force else self._handoff.pop(table_dir, None)
+        listed: dict[str, dict] = {}  # epoch -> its range files (one listing)
         if handoff is None:
             own, absorbed, guard = None, set(), {}
             marked: set[str] = set()
             idx = live_index(self._fs, live, marked)
         else:
             own, idx, marked, absorbed, guard = handoff
-            idx.update(live_index(self._fs, live, marked, epochs=[own]))
+            listed[own] = self._list_epoch(live, own, marked)
+            idx[own] = sorted(listed[own])
         ranges = self._live_ranges(idx) if force else self._ready_ranges(idx)
         # crash-replay guard (code review r11): a range whose FINAL file
         # already exists was completely finalized by a pre-crash pass —
@@ -558,21 +535,24 @@ class StreamingSink:
         # the crash predates the demotion) before this probe can run.
         fresh = [rs for rs in ranges if not (
             guard[rs] if rs in guard else self._finalized(table_dir, rs))]
-        srcs = {rs: self._range_dirs(idx, live, rs) for rs in ranges}
+        srcs = {rs: live_range_dirs(idx, live, rs) for rs in ranges}
         renames, merges = {}, []
         for rs in fresh:
             # an absorbed range's file in this epoch holds its older
             # sources' rows too: those are only deleted
-            ds = [d for d in srcs[rs]
+            es = [d.split("/")[-2] for d in srcs[rs]
                   if rs not in absorbed or d.split("/")[-2] == own]
-            if len(ds) == 1 and ds[0].split("/")[-2] in marked:
-                renames[rs] = ds[0]
+            if len(es) == 1 and es[0] in marked:
+                renames[rs] = es[0]
             else:
                 merges.append(rs)
         template = None
         if renames:
+            for e in sorted(set(renames.values()) - set(listed)):
+                listed[e] = self._list_epoch(live, e, marked)
+            parts = {rs: listed[e].get(rs, []) for rs, e in renames.items()}
             template = url_join(table_dir, _finalize(
-                self.spark, self._fs, renames, table_dir, self.opts)[0])
+                self.spark, self._fs, parts, table_dir, self.opts)[0])
         if merges:
             template = _read_range_dirs(
                 self.spark, [d for rs in merges for d in srcs[rs]])
@@ -595,6 +575,17 @@ class StreamingSink:
         if fresh and max(fresh) > self.opts.start_block:
             backfill_empty(self.spark, template, table_dir, self.opts,
                            upto=max(fresh) - 1)
+
+    def _list_epoch(self, live: str, e: str,
+                    marked: set[str]) -> dict[int, list[tuple[str, int]]]:
+        """ONE recursive listing of a live epoch dir: its range files in
+        block order (:func:`staged_ranges`); ``e`` joins ``marked`` if the
+        listing holds the range-files marker."""
+        root = url_join(live, e)
+        listing = self._fs.list_sizes(root, recursive=True)
+        if RANGE_FILES_MARKER in listing:
+            marked.add(e)
+        return staged_ranges(listing, root, key="range_start")
 
     # -- terminal drain -----------------------------------------------------
 
@@ -694,8 +685,8 @@ class StreamingSink:
 
     def _repair_live_rewrites(self, table_dir: str) -> None:
         """Finish or drop a crashed ``_undo_live`` rewrite (code review
-        r11). Every reader skips the "_"-prefixed tmp, but a crash between
-        delete(src) and the rename leaves the kept rows ONLY there. src
+        r11). No range listing picks up the "_"-prefixed tmp, but a crash
+        between delete(src) and the rename leaves the kept rows ONLY there. src
         missing → the tmp is complete (src is deleted only after the write
         returns): rename it into place; src present → drop the tmp."""
         live = url_join(table_dir, "_live")
@@ -716,7 +707,7 @@ class StreamingSink:
         live = url_join(table_dir, "_live")
         idx = self._live_index(live)
         for rs in self._live_ranges(idx):
-            for src in self._range_dirs(idx, live, rs):
+            for src in live_range_dirs(idx, live, rs):
                 if rs > last_valid_block:
                     self._fs.delete(src, recursive=True)
                     continue
@@ -739,20 +730,16 @@ class StreamingSink:
                 # "_"-prefixed sibling, NOT src + "_rewrite": a dir named
                 # range_start=N_rewrite matches live_index's prefix filter
                 # and int()-poisons every later listing if a crash strands
-                # it — while an underscore prefix is invisible to both
-                # live_index and Spark's hidden-path rule, and
-                # _repair_live_rewrites converges it at the next recovery
+                # it. Spark does not hide this name (it holds "="), but a
+                # stranded one is harmless: _recover converges it
+                # (_repair_live_rewrites) before any reader of _live runs
                 parent, base = src.rsplit("/", 1)
                 tmp = url_join(parent, "_rewrite_" + base)
                 # one block-sorted file (a write_tasks range's __sub=K files
                 # become one): the epoch's range-files marker must stay true
-                writer = (
-                    kept.coalesce(1).sortWithinPartitions("block_number")
-                    .write.mode("overwrite")
-                )
-                for k, v in parquet_write_options(self.opts).items():
-                    writer = writer.option(k, v)
-                writer.parquet(tmp)
+                kept.coalesce(1).sortWithinPartitions("block_number").write.mode(
+                    "overwrite").options(**parquet_write_options(self.opts)
+                                         ).parquet(tmp)
                 self._fs.delete(src, recursive=True)
                 self._fs.rename(tmp, src)
 
@@ -786,10 +773,8 @@ class StreamingSink:
                     (F.col("block_number") >= s)
                     & (F.col("block_number") < s + self.opts.partition_size)
                 )
-                writer = part.write.mode("overwrite")
-                for k, v in parquet_write_options(self.opts).items():
-                    writer = writer.option(k, v)
-                writer.parquet(dst)
+                part.write.mode("overwrite").options(
+                    **parquet_write_options(self.opts)).parquet(dst)
         finally:
             kept.unpersist()
 

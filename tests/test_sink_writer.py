@@ -227,7 +227,7 @@ def test_mixed_staged_layout_raises_instead_of_dropping_rows(spark, tmp_path):
     import pyarrow as pa
 
     from substreams_sink_parquet_spark.fsio import HadoopFS
-    from substreams_sink_parquet_spark.sink.writer import _ordered_range_parts
+    from substreams_sink_parquet_spark.sink.writer import _range_parts
 
     part_dir = tmp_path / "staging" / "__range_start=0"
     sub = part_dir / "__sub=0"
@@ -237,8 +237,8 @@ def test_mixed_staged_layout_raises_instead_of_dropping_rows(spark, tmp_path):
     pq.write_table(tbl, str(part_dir / "part-00001.parquet"))  # flat leftover
     fs = HadoopFS(spark, str(tmp_path))
     with pytest.raises(RuntimeError, match="mixed staged layout"):
-        _ordered_range_parts(fs, str(part_dir))
+        _range_parts(fs.list_sizes(str(part_dir), recursive=True), str(part_dir))
     # a clean sub layout still resolves
     os.remove(str(part_dir / "part-00001.parquet"))
-    parts = _ordered_range_parts(fs, str(part_dir))
+    parts = _range_parts(fs.list_sizes(str(part_dir), recursive=True), str(part_dir))
     assert [p for p, _ in parts] == ["__sub=0/part-00000.parquet"]

@@ -391,3 +391,44 @@ def test_file_stamp_single_stat_change_detector(spark, tmp_path):
     assert s2 != s1 and s2[0] == s1[0]
     p.unlink()
     assert fs.file_stamp(str(p)) is None
+
+
+def test_listings_make_one_store_call_and_read_absent_as_empty(spark, tmp_path):
+    """listdir, list_sizes and is_dir make ONE FileSystem call each (a
+    recursive list_sizes one per tree level): no exists() pre-probe, a
+    missing path reads as empty (or False) from the FileNotFoundException.
+    Starts no Spark job."""
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+
+    fs = HadoopFS(spark, str(tmp_path))
+    calls = []
+
+    class Counting:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            calls.append(name)
+            return getattr(self._inner, name)
+
+    fs.fs = Counting(fs.fs)
+    d = tmp_path / "d"
+    missing = str(tmp_path / "nope")
+    for call, empty in ((fs.listdir, []), (fs.list_sizes, {}),
+                        (lambda u: fs.list_sizes(u, recursive=True), {}),
+                        (fs.is_dir, False)):
+        calls.clear()
+        assert call(missing) == empty
+        assert len(calls) == 1, calls
+    (d / "sub").mkdir(parents=True)
+    (d / "a.parquet").write_bytes(b"aa")
+    (d / "sub" / "b.parquet").write_bytes(b"bbb")
+    for call, want in ((fs.listdir, ["a.parquet", "sub"]),
+                       (fs.list_sizes, {"a.parquet": 2}),
+                       (lambda u: fs.list_sizes(u, recursive=True),
+                        {"a.parquet": 2, "sub/b.parquet": 3}),
+                       (fs.is_dir, True)):
+        calls.clear()
+        assert call(str(d)) == want
+        assert len(calls) == (2 if isinstance(want, dict) and len(want) == 2
+                              else 1), calls

@@ -1403,3 +1403,84 @@ def test_close_sweeps_an_epoch_that_never_held_a_range(spark, tmp_path):
     live = os.path.join(out_dir, "_live")
     assert not os.path.exists(live) or not os.listdir(live), os.listdir(live)
     assert _final_files(out_dir) == ["0000000000-0000000010.parquet"]
+
+
+def test_finalize_listings_do_not_grow_with_ranges_renamed(spark, tmp_path,
+                                                          monkeypatch):
+    """A batch that renames 8 ranges makes as many listdir and list_sizes
+    calls as one that renames 2: finalize lists the batch's epoch dir once,
+    recursively, and that listing names every file it renames — no listing
+    per range dir."""
+    from collections import Counter
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    calls = Counter()
+    for name in ("listdir", "list_sizes"):
+        def counting(self, *args, _orig=getattr(HadoopFS, name), _name=name,
+                     **kwargs):
+            calls[_name] += 1
+            return _orig(self, *args, **kwargs)
+        monkeypatch.setattr(HadoopFS, name, counting)
+    seen = {}
+    for n in (2, 8):
+        out_dir = str(tmp_path / f"out{n}")
+        os.makedirs(out_dir)
+        calls.clear()
+        StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                      opts=WriterOptions(partition_size=10, start_block=0),
+                      ).process_batch(_blocks_df(spark, list(range(n * 10))), 0)
+        assert len(_final_files(out_dir)) == n
+        seen[n] = dict(calls)
+    assert seen[2] == seen[8], seen
+
+
+def test_subsplit_rename_crash_then_replay_keeps_every_row(spark, tmp_path,
+                                                           monkeypatch):
+    """Under write_tasks a range finalizes as -partNNNN siblings. A crash
+    after the first rename must not leave -part0000, the file the replay
+    guard probes for, without its siblings: the replay would read the
+    range as finalized and drop the rows of the parts still live. Each
+    range's later parts move first, so the replay rewrites the range."""
+    import pytest
+
+    from substreams_sink_parquet_spark.fsio import HadoopFS
+    from substreams_sink_parquet_spark.sink.writer import lake_coverage
+    from substreams_sink_parquet_spark.streaming.stream_sink import (
+        StreamingSink,
+    )
+
+    from .test_sink_writer import _blocks_df
+
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    opts = WriterOptions(partition_size=10, start_block=0, write_tasks=6)
+    raw = _blocks_df(spark, list(range(30)))
+
+    def first_move_then_crash(self, moves):
+        self.rename(*list(moves)[0])
+        raise IOError("crash after the first rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(HadoopFS, "rename_all", first_move_then_crash)
+        with pytest.raises(IOError, match="first rename"):
+            StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                          opts=opts).process_batch(raw, epoch_id=0)
+    StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir,
+                  opts=opts).process_batch(raw, epoch_id=0)
+    blocks = sorted(
+        b
+        for f in _final_files(out_dir)
+        for b in pq.read_table(
+            os.path.join(out_dir, f)
+        ).column("block_number").to_pylist()
+    )
+    assert blocks == list(range(30))
+    assert lake_coverage(HadoopFS(spark, out_dir), out_dir)["contiguous"]
+    live = os.path.join(out_dir, "_live")
+    assert not os.path.exists(live) or not os.listdir(live)

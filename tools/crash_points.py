@@ -22,9 +22,13 @@ here, and the per-table appends run one at a time
 (``exploded_write_workers=1``), so that mutation k names the same call in
 every run.
 
+``--write-tasks N`` sets the scenario's ``WriterOptions.write_tasks``, so
+that a range written by a batch alone splits into ``__sub=K`` block
+sub-ranges and finalizes as ``-partNNNN`` siblings.
+
 Usage::
 
-    python tools/crash_points.py [--ks 0,7,12] [--json OUT.json]
+    python tools/crash_points.py [--ks 0,7,12] [--write-tasks N] [--json OUT.json]
 
 Prints one line per k and exits non-zero if any k breaks an invariant.
 One run takes seconds; the full sweep takes minutes, which is why this is
@@ -41,6 +45,7 @@ import tempfile
 import time
 from collections import Counter
 from contextlib import contextmanager
+from dataclasses import replace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -167,8 +172,8 @@ def recording(rec: Recorder):
             setattr(owner, name, orig)
 
 
-def new_sink(spark, out_dir: str) -> StreamingSink:
-    return StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir, opts=OPTS,
+def new_sink(spark, out_dir: str, opts: WriterOptions) -> StreamingSink:
+    return StreamingSink(spark=spark, spec=BLOCK, out_dir=out_dir, opts=opts,
                          undo_holdback=HOLDBACK, explode=True,
                          exploded_write_workers=1)
 
@@ -183,19 +188,20 @@ def apply(sink: StreamingSink, step, frames) -> None:
         sink.close()
 
 
-def run_scenario(spark, out_dir: str, frames, crash_at: int | None = None):
+def run_scenario(spark, out_dir: str, frames, opts: WriterOptions = OPTS,
+                 crash_at: int | None = None):
     """Returns (mutation log, crashed step index and call, or None)."""
     os.makedirs(out_dir)
     rec = Recorder(out_dir, crash_at)
     crashed = None
     with recording(rec):
-        sink = new_sink(spark, out_dir)
+        sink = new_sink(spark, out_dir, opts)
         for i, step in enumerate(STEPS):
             try:
                 apply(sink, step, frames)
             except Crash as e:
                 crashed = (i, str(e))
-                sink = new_sink(spark, out_dir)  # the restarted process
+                sink = new_sink(spark, out_dir, opts)  # the restarted process
                 apply(sink, step, frames)
     return rec.log, crashed
 
@@ -239,8 +245,11 @@ def check(spark, out_dir: str, want: dict[int, int]) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--ks", help="comma-separated crash indices (default: all)")
+    ap.add_argument("--write-tasks", type=int, default=None,
+                    help="WriterOptions.write_tasks for the scenario")
     ap.add_argument("--json", help="write per-k outcomes here")
     args = ap.parse_args()
+    opts = replace(OPTS, write_tasks=args.write_tasks)
 
     from substreams_sink_parquet_spark.session import get_spark
 
@@ -253,7 +262,7 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="crash_points_")
     try:
         t0 = time.time()
-        log, _ = run_scenario(spark, os.path.join(work, "clean"), frames)
+        log, _ = run_scenario(spark, os.path.join(work, "clean"), frames, opts)
         clean = check(spark, os.path.join(work, "clean"), want)
         clean_s = time.time() - t0
         kinds = Counter(kind for kind, _ in log)
@@ -266,7 +275,8 @@ def main() -> int:
             out_dir = os.path.join(work, f"k{k}")
             t0 = time.time()
             try:
-                _, crashed = run_scenario(spark, out_dir, frames, crash_at=k)
+                _, crashed = run_scenario(spark, out_dir, frames, opts,
+                                          crash_at=k)
                 problems = check(spark, out_dir, want)
             except Exception as e:  # the replay itself failed
                 crashed, problems = None, [f"replay raised {type(e).__name__}: "
